@@ -14,11 +14,6 @@ def scaled_amount(col: Column, decimals: int = 7) -> Column:
     return col.cast("double") / F.lit(10**decimals)
 
 
-def scaled_amount_decimal(col: Column, decimals: int = 7) -> Column:
-    """Exact variant using Decimal (the reference computes via big.Rat)."""
-    return (col.cast("decimal(38,7)") / F.lit(10**decimals)).cast("decimal(38,7)")
-
-
 # The engine-wide failed-turn predicate (tx `successful` flag analog,
 # schema.go:58): a turn failed iff its payload carries the error marker.
 # Single definition — six operators share it; the DuckDB oracle mirror is
@@ -54,17 +49,6 @@ def stable_id(*cols: Column) -> Column:
     return F.xxhash64(*cols)
 
 
-# C8: memo switch — type discriminator → one string column
-# (transform/transaction.go:74-89). Ours keys on role.
-def memo_switch(type_col: Column, text: Column, id_: Column, hash_: Column) -> Column:
-    return (
-        F.when(type_col == "text", text)
-        .when(type_col == "id", id_.cast("string"))
-        .when(type_col == "hash", F.lower(F.hex(hash_.cast("binary"))))
-        .otherwise(F.lit(None).cast("string"))
-    )
-
-
 # C9: interval formatting "[min,max)" (transform/transaction.go:90-111).
 def interval_str(lo: Column, hi: Column) -> Column:
     return F.format_string("[%d,%d)", lo.cast("long"), hi.cast("long"))
@@ -94,11 +78,6 @@ def flag_names(flags: Column, names: dict[int, str]) -> Column:
         *[F.when(flag_bool(flags, bit), F.lit(name)) for bit, name in sorted(names.items())]
     )
     return F.filter(arr, lambda x: x.isNotNull())
-
-
-# C14: path-array transform (operation.go:512-531) — higher-order function.
-def transform_path(col: Column, fn) -> Column:
-    return F.transform(col, fn)
 
 
 # C16: key → sha256 hex (utils/main.go:1080-1086 LedgerEntryToLedgerKeyHash).

@@ -54,25 +54,6 @@ def compact_last_state(
     )
 
 
-def compact_last_state_per_window(
-    df: DataFrame, keys: Sequence[str], window: str = "5 minutes"
-) -> DataFrame:
-    """Per-tumbling-window compaction — the reference compacts per 64-ledger
-    batch, not globally (changes.go:125-135): one surviving row per key per
-    window."""
-    win = F.window("ts", window)
-    return (
-        df.withColumn("_win", win)
-        .withColumn("_rn", F.row_number().over(Window.partitionBy("_win", *keys).orderBy(F.col("ts").desc(), F.col("turn_idx").desc())))
-        .where(F.col("_rn") == 1)
-        .select(
-            F.col("_win.start").alias("window_start"),
-            F.col("_win.end").alias("window_end"),
-            *df.columns,
-        )
-    )
-
-
 def streaming_first_seen_dedup(df: DataFrame, keys: Sequence[str], watermark: str) -> DataFrame:
     """Streaming A2: watermark-bounded state eviction — late duplicates beyond
     the watermark are the documented deviation (reference input is totally

@@ -123,8 +123,6 @@ def q_fanout_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stellar_etl_spark.operators import extract_effects, extract_units
     from stellar_etl_spark.streaming.pipeline import run_fanout_export
 
-    import os as _os
-
     work = tempfile.mkdtemp(prefix="fanout_q_")
     try:
         src = f"{work}/src"
@@ -140,7 +138,7 @@ def q_fanout_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
             src,
             partition_by_day=False,
         )
-        n_files = len([f for f in _os.listdir(src) if f.startswith("part-")])
+        n_files = len(_data_files(src))
         # the written table carries only the TRANSCRIPTS schema; the
         # SQL-reproducible conv_seq is recoverable from the conv_id format
         # ('conv_%08d' of the same number)
@@ -684,6 +682,31 @@ def _harness_partitions(spark: SparkSession, n: int = 8):
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", old_store)
 
 
+def _data_files(src: str) -> list[str]:
+    """The parquet part files a harness wrote under ``src``. Raises when there
+    are none: the harness would otherwise run a sentinel-only stream and
+    return an empty, trivially oracle-equal result."""
+    import os
+
+    files = [f for f in os.listdir(src) if f.startswith("part-")]
+    if len(files) < 1:
+        raise RuntimeError(f"streaming harness wrote no data files under {src}")
+    return files
+
+
+def _stamp_after(src: str, data_files: list[str]) -> None:
+    """Set every part file under ``src`` not in ``data_files`` (the sentinel)
+    to a modification time later than all of them. The file source orders
+    new files by mtime; write order alone does not guarantee it (coarse
+    filesystem timestamps, clock steps)."""
+    import os
+
+    later = max(os.path.getmtime(os.path.join(src, f)) for f in data_files) + 1
+    for f in os.listdir(src):
+        if f.startswith("part-") and f not in data_files:
+            os.utime(os.path.join(src, f), (later, later))
+
+
 def _run_streaming_query(
     spark: SparkSession,
     tv: DataFrame,
@@ -698,10 +721,11 @@ def _run_streaming_query(
     merged sink contents — the oracle harness for the stateful operators.
 
     Layout: ``src_partitions`` hash(conv_id) data files + a far-future
-    flush-sentinel file (written strictly later; the file source orders new
-    files by modification time, so with ``maxFilesPerTrigger = n_data_files``
-    the sentinel is processed last) — data batch, sentinel batch (advances
-    the watermark past every pending window/state), then Spark's no-data
+    flush-sentinel file (its modification time is set past every data file;
+    the file source orders new files by modification time, so with
+    ``maxFilesPerTrigger = n_data_files`` the sentinel is processed last) —
+    data batch, sentinel batch (advances the watermark past every pending
+    window/state), then Spark's no-data
     batch fires the event-time timeouts and the state drains. r6: the data
     write is a hash repartition, NOT ``coalesce(1)`` — coalesce collapses
     the whole transcripts derivation (scan + window) into ONE task (measured
@@ -722,7 +746,6 @@ def _run_streaming_query(
     trip moved every row driver-side through pickle twice (~6 s per 200k
     rows, ~15 s at the 10^6-row bench scale; guide §5 "the driver should do
     almost no data work")."""
-    import os as _os
     import shutil
     import tempfile
 
@@ -742,7 +765,8 @@ def _run_streaming_query(
         # 46->55 s (pairs), 20->26 s (conv_state), 19->23 s (join) at sf1.0 —
         # per-partition state-store/commit fixed cost beats the extra
         # parallelism at every scale this harness runs at.
-        n_files = len([f for f in _os.listdir(src) if f.startswith("part-")])
+        data_files = _data_files(src)
+        n_files = len(data_files)
         if per_conv_flush:
             sentinel = (
                 tv.select("conv_id")
@@ -763,6 +787,7 @@ def _run_streaming_query(
                 "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
             ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAYS"))
         sentinel.write.mode("append").parquet(src)
+        _stamp_after(src, data_files)
 
         sink = IdempotentSink(f"{work}/out", keys, output_partitions=4)
         with _harness_partitions(spark):
@@ -891,7 +916,8 @@ GROUP BY conv_id, session_seq
 # --- streaming running conversation state (S11/T8/A6, driver-facing) ---------
 def q_streaming_conv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ACTUAL cross-batch accumulating state path (S11 orderbook-stream
-    analog / A6): applyInPandasWithState in UPDATE mode through checkpoint +
+    analog / A6): Spark's native streaming aggregate in UPDATE mode (state-
+    store partial aggregates, no Python worker) through checkpoint +
     exactly-once sink. Each micro-batch emits a running snapshot per
     conversation; the sink's key-precedence merge (highest epoch wins) keeps
     the LAST snapshot, which must equal the plain batch aggregation over all

@@ -89,10 +89,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_all() -> None:
-    """Stop the active session (test teardown helper)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -219,13 +219,19 @@ class IdempotentSink:
     def read_raw(self, spark: SparkSession) -> DataFrame:
         """All committed epochs, epoch column included. Raises a clear error
         (not a glob AnalysisException) when nothing has been committed —
-        callers that tolerate empty sinks check :meth:`has_epochs` first."""
+        callers that tolerate empty sinks check :meth:`has_epochs` first.
+
+        The epoch directories are listed and loaded by name under
+        ``basePath``: loading the ``epoch=*`` glob made Spark probe it for a
+        streaming-sink metadata directory and log a warning with a stack
+        trace on every readback."""
         if not self.has_epochs():
             raise FileNotFoundError(f"no committed epochs under {self.path}")
+        epochs = sorted(n for n in os.listdir(self.path) if n.startswith("epoch="))
         return (
             spark.read.option("basePath", self.path)
             .format(self.fmt)
-            .load(os.path.join(self.path, "epoch=*"))
+            .load([os.path.join(self.path, n) for n in epochs])
         )
 
     def read_sink(self, spark: SparkSession) -> DataFrame:

@@ -1,6 +1,6 @@
-"""Custom stateful streaming operators (``applyInPandasWithState``).
-
-Two operators, mirroring the reference's cross-batch state machinery:
+"""Stateful streaming operators: one ``applyInPandasWithState`` matcher and
+one native streaming aggregate, mirroring the reference's cross-batch state
+machinery:
 
 - :func:`streaming_pairs` — the J2 stateful stream-stream join (north star):
   user turns paired with their first following assistant/tool response,
@@ -11,10 +11,12 @@ Two operators, mirroring the reference's cross-batch state machinery:
 - :func:`running_conversation_state` — the A6 orderbook-state analog
   (``internal/input/orderbooks.go:194-209 UpdateOrderbook``): a per-key
   accumulator folded across micro-batches, emitting a snapshot per batch.
+  It only counts, sums and takes maxima, so it is Spark's update-mode
+  ``groupBy().agg()`` — the state store holds the partial aggregates.
 
-State is Arrow-exchanged pandas (no per-row Python), keyed by ``conv_id``;
-state size is bounded by the watermark: a buffered row is evicted as soon as
-the watermark proves no future row can pair with it.
+The matcher's state is Arrow-exchanged pandas (no per-row Python), keyed by
+``conv_id``; its size is bounded by the watermark: a buffered row is evicted
+as soon as the watermark proves no future row can pair with it.
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ from typing import Any, Iterable, Iterator, Tuple
 import pandas as pd
 
 from pyspark.sql import DataFrame
+import pyspark.sql.functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     IntegerType,
@@ -241,67 +244,21 @@ def streaming_pairs(
 # --------------------------------------------------------------------------
 # A6: running per-conversation accumulator
 # --------------------------------------------------------------------------
-CONVSTATE_OUT = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("n_turns", LongType()),
-        StructField("n_user", LongType()),
-        StructField("max_turn_idx", IntegerType()),
-        StructField("total_chars", LongType()),
-        StructField("last_ts", TimestampType()),
-    ]
-)
-
-CONVSTATE_STATE = StructType(
-    [
-        StructField("n_turns", LongType()),
-        StructField("n_user", LongType()),
-        StructField("max_turn_idx", IntegerType()),
-        StructField("total_chars", LongType()),
-        StructField("last_ts_us", LongType()),
-    ]
-)
-
-
-def _convstate_fn(
-    key: Tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    n_turns, n_user, max_idx, chars, last_us = (
-        state.get if state.exists else (0, 0, -1, 0, 0)
-    )
-    for pdf in pdfs:
-        if pdf.empty:
-            continue
-        n_turns += len(pdf)
-        n_user += int((pdf["role"] == "user").sum())
-        max_idx = max(max_idx, int(pdf["turn_idx"].max()))
-        chars += int(pdf["text"].fillna("").str.len().sum())
-        last_us = max(last_us, int(pdf["ts"].astype("int64").max() // 1000))
-    state.update((n_turns, n_user, max_idx, chars, last_us))
-    yield pd.DataFrame(
-        [
-            {
-                "conv_id": key[0],
-                "n_turns": n_turns,
-                "n_user": n_user,
-                "max_turn_idx": max_idx,
-                "total_chars": chars,
-                "last_ts": pd.Timestamp(last_us, unit="us"),
-            }
-        ]
-    )
-
-
 def running_conversation_state(df: DataFrame, watermark: str = "2 minutes") -> DataFrame:
-    """Cross-batch accumulating snapshot per conversation (update-mode)."""
+    """Cross-batch accumulating snapshot per conversation (update-mode).
+
+    Counts, sums and maxima only, so Spark's native streaming aggregate
+    carries the state — no Python worker. The grouping key holds no
+    event-time column, so the watermark neither filters late rows nor evicts
+    state: every row is counted, as in the reference's fold."""
     return (
         df.withWatermark("ts", watermark)
         .groupBy("conv_id")
-        .applyInPandasWithState(
-            _convstate_fn,
-            outputStructType=CONVSTATE_OUT,
-            stateStructType=CONVSTATE_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        .agg(
+            F.count(F.lit(1)).alias("n_turns"),
+            F.count(F.when(F.col("role") == "user", 1)).alias("n_user"),
+            F.max("turn_idx").alias("max_turn_idx"),
+            F.sum(F.length(F.coalesce("text", F.lit("")))).alias("total_chars"),
+            F.max("ts").alias("last_ts"),
         )
     )

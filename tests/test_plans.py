@@ -309,3 +309,31 @@ def test_corpus_pipeline_no_degenerate_joins(spark):
     plan = _plan(build_training_corpus(d, min_quality=0.0, min_jaccard=0.9))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_streaming_conv_state_native_aggregate(spark, tmp_path):
+    """The running conversation accumulator only counts, sums and takes
+    maxima: its executed streaming plan is Spark's state-store aggregate
+    (StateStoreRestore/Save around a partial+final HashAggregate) with no
+    pandas-state node and so no Python worker."""
+    from stellar_etl_spark.sources.transcripts import read_stream
+    from stellar_etl_spark.streaming.state import running_conversation_state
+
+    src = str(tmp_path / "src")
+    write_transcripts(transcripts_df(spark, n_convs=5), src)
+    q = (
+        running_conversation_state(read_stream(spark, src), "2 minutes")
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+        plan = q._jsq.explainInternal(False)
+    finally:
+        q.stop()
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    assert "StateStoreSave" in plan and "StateStoreRestore" in plan
+    assert "Python" not in plan and "ArrowEval" not in plan

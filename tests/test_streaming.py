@@ -43,6 +43,31 @@ def _flush_sentinel(spark, path, ts="2026-06-01 00:00:00"):
     s.write.mode("append").partitionBy("ts_date").parquet(path)
 
 
+def _write_file_at(spark, src, rows, mtime_offset_sec):
+    """Append one parquet file of transcript rows and pin its modification
+    time: the file source orders batches by mtime, so tests whose semantics
+    depend on the batch order must not rely on write order."""
+    import glob
+    import time as _time
+
+    (
+        spark.createDataFrame(
+            rows,
+            "conv_id string, turn_idx int, role string, text string, tool string, ts string",
+        )
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withColumn("ts_date", F.to_date("ts"))
+        .coalesce(1)
+        .write.mode("append")
+        .partitionBy("ts_date")
+        .parquet(src)
+    )
+    now = _time.time()
+    for f in glob.glob(src + "/*/*.parquet"):
+        if os.path.getmtime(f) > now - 5:
+            os.utime(f, (now + mtime_offset_sec, now + mtime_offset_sec))
+
+
 def test_stream_equals_batch_and_lineage(spark, source, tmp_path):
     path, df = source
     sink = IdempotentSink(str(tmp_path / "turns"), ("conv_id", "turn_idx"))
@@ -169,13 +194,76 @@ def test_running_state_accumulates(spark, source, tmp_path):
                sink, str(tmp_path / "ckpt"), max_files_per_trigger=2,
                output_mode="update")
     # merge-on-read keeps the LAST snapshot per conv — must equal batch totals
-    got = {r["conv_id"]: r for r in sink.read_sink(spark).collect()}
-    want = {r["conv_id"]: r for r in df.groupBy("conv_id").agg(
-        F.count("*").alias("n"), F.max("turn_idx").alias("m")).collect()}
-    assert set(got) == set(want)
-    for cid, w in want.items():
-        assert got[cid]["n_turns"] == w["n"], cid
-        assert got[cid]["max_turn_idx"] == w["m"], cid
+    got = sink.read_sink(spark)
+    want = df.groupBy("conv_id").agg(
+        F.count(F.lit(1)).alias("n_turns"),
+        F.count(F.when(F.col("role") == "user", 1)).alias("n_user"),
+        F.max("turn_idx").alias("max_turn_idx"),
+        F.sum(F.length(F.coalesce("text", F.lit("")))).alias("total_chars"),
+        F.max("ts").alias("last_ts"),
+    )
+    assert [(f.name, f.dataType) for f in got.schema.fields] == [
+        (f.name, f.dataType) for f in want.schema.fields
+    ]
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    # more than one snapshot epoch: the state really crossed micro-batches
+    assert sink.read_raw(spark).select("epoch").distinct().count() > 1
+
+
+def test_running_state_counts_rows_behind_watermark(spark, tmp_path):
+    """The accumulator's grouping key has no event-time column, so a row
+    arriving after the watermark has passed it is still folded in — the
+    reference's orderbook fold never drops a change."""
+    src = str(tmp_path / "src")
+    _write_file_at(spark, src, [
+        ("conv_a", 0, "user", "hello", None, "2026-01-01 10:00:00"),
+        ("conv_a", 1, "assistant", "héllo 東京", None, "2026-01-01 10:00:10"),
+        ("advancer", 0, "user", "far future", None, "2026-01-01 12:00:00"),
+    ], -120)
+    _write_file_at(spark, src, [
+        ("conv_b", 0, "user", None, None, "2026-01-01 12:00:30"),
+    ], -60)
+    # two batches after the watermark (11:58) passed 10:00:20
+    _write_file_at(spark, src, [
+        ("conv_a", 2, "user", "late", None, "2026-01-01 10:00:20"),
+    ], 0)
+    sink = IdempotentSink(str(tmp_path / "state"), ("conv_id",))
+    run_export(spark, src, lambda s: running_conversation_state(s, "2 minutes"),
+               sink, str(tmp_path / "ck"), max_files_per_trigger=1,
+               output_mode="update")
+    raw = sink.read_raw(spark).where(F.col("conv_id") == "conv_a").collect()
+    assert sorted(r["n_turns"] for r in raw) == [2, 3]
+    got = {r["conv_id"]: r.asDict() for r in sink.read_sink(spark).collect()}
+    assert got["conv_a"]["n_turns"] == 3 and got["conv_a"]["n_user"] == 2
+    assert got["conv_a"]["max_turn_idx"] == 2
+    assert got["conv_a"]["total_chars"] == len("hello") + len("héllo 東京") + len("late")
+    assert str(got["conv_a"]["last_ts"]) == "2026-01-01 10:00:20"
+    assert got["conv_b"]["total_chars"] == 0
+
+
+def test_harness_sentinel_ordered_by_mtime(tmp_path):
+    """The oracle harness's flush sentinel must be the newest file by mtime,
+    whatever order the files were written in, and a harness that wrote no
+    data files must fail instead of checking an empty stream."""
+    import time as _time
+
+    from stellar_etl_spark.plans.registry import _data_files, _stamp_after
+
+    src = tmp_path / "src"
+    src.mkdir()
+    with pytest.raises(RuntimeError, match="no data files"):
+        _data_files(str(src))
+    future = _time.time() + 100
+    for name in ("part-00000.parquet", "part-00001.parquet"):
+        (src / name).write_bytes(b"")
+        os.utime(src / name, (future, future))
+    (src / ".part-00000.parquet.crc").write_bytes(b"")
+    data = _data_files(str(src))
+    assert sorted(data) == ["part-00000.parquet", "part-00001.parquet"]
+    (src / "part-00002.parquet").write_bytes(b"")  # the sentinel, older by mtime
+    _stamp_after(str(src), data)
+    assert os.path.getmtime(src / "part-00002.parquet") > future
+    assert os.path.getmtime(src / "part-00000.parquet") == future
 
 
 def test_fanout_single_scan(spark, source, tmp_path):
@@ -355,47 +443,24 @@ def test_late_row_watermark_semantics(spark, tmp_path):
     batches later is dropped outright — the emitted window is final."""
     from stellar_etl_spark.operators.conversations import extract_conversations_windowed
 
-    import glob
-    import time as _time
-
     src = str(tmp_path / "src")
 
-    def write_file(rows, mtime_offset_sec):
-        (
-            spark.createDataFrame(
-                rows,
-                "conv_id string, turn_idx int, role string, text string, tool string, ts string",
-            )
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withColumn("ts_date", F.to_date("ts"))
-            .coalesce(1)
-            .write.mode("append")
-            .partitionBy("ts_date")
-            .parquet(src)
-        )
-        # pin distinct modification times: the file source orders batches by
-        # mtime, and the test's semantics depend on the batch order
-        now = _time.time()
-        for f in glob.glob(src + "/*/*.parquet"):
-            if os.path.getmtime(f) > now - 5:
-                os.utime(f, (now + mtime_offset_sec, now + mtime_offset_sec))
-
-    write_file([
+    _write_file_at(spark, src, [
         ("conv_x", 0, "user", "hello", None, "2026-01-01 10:00:00"),
         ("conv_x", 1, "assistant", "hi", None, "2026-01-01 10:00:10"),
         ("advancer", 0, "user", "far future", None, "2026-01-01 12:00:00"),
     ], -180)
     # one batch after the watermark (11:59) passed the [10:00, 10:05)
     # window: still inside the grace batch -> merges before emission
-    write_file([
+    _write_file_at(spark, src, [
         ("conv_x", 2, "user", "grace turn", None, "2026-01-01 10:00:20"),
         ("conv_y", 0, "user", "on time", None, "2026-01-01 12:00:30"),
     ], -120)
     # two batches after: dropped outright, no fragment row
-    write_file([
+    _write_file_at(spark, src, [
         ("conv_x", 3, "user", "far too late", None, "2026-01-01 10:00:30"),
     ], -60)
-    write_file([
+    _write_file_at(spark, src, [
         ("flush", 0, "system", "", None, "2026-06-01 00:00:00"),
     ], 0)
     sink = IdempotentSink(str(tmp_path / "wins"), ("conv_id", "window_start"))
