@@ -128,8 +128,11 @@ def write_training_shards(
     column is already satisfied (no stacked writer Sort) even for the rare
     task straddling a split boundary.
 
-    ``num_partitions`` defaults to the session shuffle partitioning — set
-    it ~ (corpus bytes / target file size) on a real run."""
+    ``num_partitions=None`` uses the session shuffle partitioning — set it
+    ~ (corpus bytes / target file size) on a real run. Values below 1 raise
+    ``ValueError``."""
+    if num_partitions is not None and num_partitions < 1:
+        raise ValueError(f"num_partitions must be >= 1 or None, got {num_partitions}")
     joined = manifest.join(documents.select(id_col, text_col), id_col)
     n = num_partitions or int(joined.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     (

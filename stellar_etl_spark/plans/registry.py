@@ -41,6 +41,7 @@ from stellar_etl_spark.operators.conversations import extract_conversations_wind
 from stellar_etl_spark.operators.dims import denormalize
 from stellar_etl_spark.plans.transcript_view import TRANSCRIPTS_CTE, transcripts_from_events
 from stellar_etl_spark.sources.batches import with_batch_bounds
+from stellar_etl_spark.session import scoped_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -643,10 +644,6 @@ WHERE role = 'user'
 
 
 # --- stateful streaming harness (driver-facing) ------------------------------
-import contextlib
-
-
-@contextlib.contextmanager
 def _harness_partitions(spark: SparkSession, n: int = 8):
     """Shrink shuffle/state partitions for the driver-check harnesses only.
 
@@ -657,6 +654,9 @@ def _harness_partitions(spark: SparkSession, n: int = 8):
     are partition-count independent (pinned by the batch-size-independence
     tests), so 8 partitions buys the same green rows ~4x cheaper. Fresh
     checkpoints each run, so the state-partition count never conflicts.
+    ``run_export`` further caps the state partitions at the core count, so
+    below 8 cores those harnesses run one per core; the fan-out harness
+    (``run_fanout_export``, no state) keeps its 16.
 
     r6: the harness also runs on the HEAP-BACKED state store. The session
     default stays RocksDB — mandatory where streaming state exceeds the
@@ -668,18 +668,11 @@ def _harness_partitions(spark: SparkSession, n: int = 8):
     stream-stream join 17 -> 7 s, sessions 10 -> 7 s, conv_state flat.
     Same scale-dependent-parameter class as the partition shrink; both
     restore on exit."""
-    _HEAP_STORE = (
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    old_store = spark.conf.get("spark.sql.streaming.stateStore.providerClass", _HEAP_STORE)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", _HEAP_STORE)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", old_store)
+    return scoped_conf(spark, {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    })
 
 
 def _data_files(src: str) -> list[str]:
@@ -760,9 +753,10 @@ def _run_streaming_query(
             tv.repartition(src_partitions, F.col("conv_id")), src, partition_by_day=False
         )
         max_ts = tv.agg(F.max("ts")).collect()[0][0]
-        # State partitions stay at the _harness_partitions default (8): the
-        # scale-adaptive alternative (32 at 10^6 rows) was MEASURED SLOWER —
-        # 46->55 s (pairs), 20->26 s (conv_state), 19->23 s (join) at sf1.0 —
+        # State partitions stay at the _harness_partitions default (8),
+        # capped at the core count by run_export: the scale-adaptive
+        # alternative (32 at 10^6 rows) was MEASURED SLOWER — 46->55 s
+        # (pairs), 20->26 s (conv_state), 19->23 s (join) at sf1.0 —
         # per-partition state-store/commit fixed cost beats the extra
         # parallelism at every scale this harness runs at.
         data_files = _data_files(src)

@@ -10,8 +10,11 @@ Design notes for the 100 TB / 1000-executor target (tested on local[N]):
 - AQE on, with skew-join splitting: hot conversations (the "hot ledger"
   analog) are the dominant skew source; AQE splits oversized post-shuffle
   partitions at runtime.
-- ``spark.sql.shuffle.partitions`` defaults to the local core count here; on a
+- ``spark.sql.shuffle.partitions`` defaults to ``max(cores, 8)`` here; on a
   real cluster set it ~2-3x total cores (AQE coalesces the excess).
+  ``streaming.pipeline.run_export`` caps its query's state partitions at the
+  core count (``pipeline._start``), because AQE cannot coalesce state
+  partitions.
 - Arrow enabled for all pandas UDF exchange; batch size bounded so grouped-map
   state per task stays in memory.
 - RocksDB state store provider for streaming state (bundled with Spark 4):
@@ -21,7 +24,10 @@ Design notes for the 100 TB / 1000-executor target (tested on local[N]):
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -89,3 +95,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# One lock for every scoped change of session settings in this process.
+_CONF_LOCK = threading.RLock()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str | Callable[[str], str]]):
+    """Set session SQL settings for the body of the ``with`` block, then
+    restore the previous values.
+
+    A value may be a function of the current value (``lambda old: ...``).
+    The lock is held from the save to the restore: two threads that change
+    the same setting would otherwise each restore the other's temporary
+    value. It is reentrant, so a scope may open inside another on the same
+    thread. A scope blocks every other thread's scope, and so every
+    ``run_export`` start, for as long as it is open: keep it short, and
+    never open one in a ``foreachBatch`` callback of a query started inside
+    another thread's scope (the callback would wait on the lock the starting
+    thread holds until the query ends)."""
+    with _CONF_LOCK:
+        old = {k: spark.conf.get(k) for k in settings}
+        for k, v in settings.items():
+            spark.conf.set(k, v(old[k]) if callable(v) else v)
+        try:
+            yield
+        finally:
+            for k, v in old.items():
+                spark.conf.set(k, v)

@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 
 from stellar_etl_spark.generator import transcripts_df
 from stellar_etl_spark.schemas import TRANSCRIPTS
+from stellar_etl_spark.session import scoped_conf
 
 
 def measure_window_close_latency(
@@ -79,15 +80,13 @@ def measure_window_close_latency(
 
     append_slice(0)
     # The windowed aggregate holds a few hundred tiny windows: running its
-    # state on the session's full shuffle partitioning (32) pays one state
-    # store load+commit per partition per 500 ms trigger, which IS most of
-    # the close latency at this size. 8 partitions is the same
-    # fixed-cost-vs-parallelism trade the driver-check harnesses pin
-    # (registry._harness_partitions); on a real deployment size this to the
-    # stateful load, not the core count.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(agg_partitions))
-    try:
+    # state on the session's shuffle partitioning (max(cores, 8), 32 on a
+    # 32-core session) pays one state store load+commit per partition per
+    # 250 ms trigger, which IS most of the close latency at this size.
+    # ``agg_partitions`` (8) fixes the count whatever the core count; on a
+    # real deployment size it to the stateful load. The setting is scoped
+    # to ``start()``, where Spark fixes the query's state partitions.
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(agg_partitions)}):
         q = (
             agg.writeStream.foreachBatch(on_batch)
             .option("checkpointLocation", os.path.join(tmp, "ck"))
@@ -99,8 +98,6 @@ def measure_window_close_latency(
             .trigger(processingTime="250 milliseconds")
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     try:
         for i in range(1, feed_slices):
             time.sleep(feed_interval_sec)

@@ -2,6 +2,7 @@
 canonicalization -> split -> per-split packing, as one composition."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from stellar_etl_spark.functions.dedup import minhash_candidate_pairs
 from stellar_etl_spark.functions.text import fingerprint64
@@ -135,3 +136,23 @@ def test_write_training_shards_range_partitioned(spark, tmp_path):
     assert len(files) > 1, files
     back = spark.read.parquet(out)
     assert back.count() == 500
+
+
+def test_write_training_shards_rejects_nonpositive_partitions(spark, tmp_path):
+    """``num_partitions=0`` is an error, not a silent fall back to the
+    session default; ``None`` stays the way to ask for the default."""
+    d = spark.range(4).select(
+        F.col("id").alias("doc_id"), F.lit("doc").alias("text")
+    )
+    m = d.select(
+        "doc_id",
+        F.lit("train").alias("split"),
+        F.lit(1).alias("n_tokens"),
+        F.col("doc_id").alias("token_offset"),
+        F.lit(0).cast("long").alias("pack_bin"),
+    )
+    out = tmp_path / "shards"
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="num_partitions"):
+            write_training_shards(m, d, str(out), num_partitions=bad)
+    assert not out.exists()

@@ -17,6 +17,7 @@ from stellar_etl_spark.streaming.pipeline import (
     stream_stream_join_pairs,
     validate_rows,
 )
+from stellar_etl_spark.streaming.listener import MetricsListener
 from stellar_etl_spark.streaming.sink import IdempotentSink
 from stellar_etl_spark.streaming.state import running_conversation_state, streaming_pairs
 
@@ -80,9 +81,9 @@ def test_stream_equals_batch_and_lineage(spark, source, tmp_path):
     lineage = sink.lineage()
     assert len(lineage) >= 2  # multiple epochs committed
     assert sum(e["rows"] for e in lineage) == expected.count()
-    # listener progress events are delivered async — it may miss trailing
-    # batches; lineage (above) is the exact count, the listener is telemetry
-    assert m["batches"] >= 1 and 0 < m["input_rows"] <= df.count()
+    # run_export waits for the run's termination event, so the listener has
+    # every progress event of the run
+    assert m["batches"] >= 1 and m["input_rows"] == df.count()
 
 
 def test_exactly_once_replay(spark, source, tmp_path):
@@ -239,6 +240,127 @@ def test_running_state_counts_rows_behind_watermark(spark, tmp_path):
     assert got["conv_a"]["total_chars"] == len("hello") + len("héllo 東京") + len("late")
     assert str(got["conv_a"]["last_ts"]) == "2026-01-01 10:00:20"
     assert got["conv_b"]["total_chars"] == 0
+
+
+@pytest.fixture()
+def wide_session(spark):
+    """The session at twice the core count of shuffle partitions (the
+    production default on few cores), restored afterwards."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    wide = str(2 * spark.sparkContext.defaultParallelism)
+    spark.conf.set("spark.sql.shuffle.partitions", wide)
+    yield wide
+    spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _conv_state_export(spark, src, out, ck, mfpt=None):
+    sink = IdempotentSink(out, ("conv_id",))
+    m = run_export(spark, src, lambda s: running_conversation_state(s, "2 minutes"),
+                   sink, ck, max_files_per_trigger=mfpt, output_mode="update",
+                   with_listener=True)
+    return sink, m
+
+
+def test_export_caps_state_partitions_at_cores(spark, source, tmp_path, wide_session):
+    """A query started by run_export runs one state partition per core; the
+    session setting is back at its value once the query has started."""
+    path, _ = source
+    listener = MetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        # run_export's own listener, registered after this one, has seen
+        # the run's last event when it returns, so this one has too
+        _conv_state_export(spark, path, str(tmp_path / "out"), str(tmp_path / "ck"), 2)
+        (run_id,) = {s["runId"] for s in listener.snapshots}
+        assert listener.wait_terminated(run_id)
+    finally:
+        spark.streams.removeListener(listener)
+    cores = spark.sparkContext.defaultParallelism
+    instances = [op["numStateStoreInstances"]
+                 for s in listener.snapshots for op in s["stateOperators"]]
+    assert len(listener.snapshots) >= 2 and set(instances) == {cores}
+    assert listener.summary(run_id)["state_partitions"] == cores
+    assert spark.conf.get("spark.sql.shuffle.partitions") == wide_session
+
+
+def test_resumed_checkpoint_keeps_state_partitions(spark, tmp_path, wide_session):
+    """A checkpoint made at more partitions than cores resumes at its own
+    count through run_export, and ends with the rows of one uninterrupted
+    run."""
+    from stellar_etl_spark.sources.transcripts import read_stream
+
+    df = transcripts_df(spark, n_convs=12)
+    src, ck = str(tmp_path / "src"), str(tmp_path / "ck")
+    write_transcripts(df.where("turn_idx < 3").coalesce(1), src, partition_by_day=False)
+    sink = IdempotentSink(str(tmp_path / "out"), ("conv_id",))
+    q = (
+        running_conversation_state(read_stream(spark, src), "2 minutes")
+        .writeStream.foreachBatch(sink.foreach_batch)
+        .option("checkpointLocation", ck)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert {p["stateOperators"][0]["numStateStoreInstances"] for p in q.recentProgress} == {
+        int(wide_session)
+    }
+    write_transcripts(df.where("turn_idx >= 3").coalesce(1), src, partition_by_day=False,
+                      mode="append")
+    sink, resumed = _conv_state_export(spark, src, str(tmp_path / "out"), ck)
+    assert resumed["batches"] >= 1 and resumed["state_partitions"] == int(wide_session)
+    whole, _ = _conv_state_export(spark, src, str(tmp_path / "whole"), str(tmp_path / "ck-whole"))
+    assert sorted(map(tuple, sink.read_sink(spark).collect())) == sorted(
+        map(tuple, whole.read_sink(spark).collect())
+    )
+
+
+def test_concurrent_exports_restore_session_partitions(spark, source, tmp_path, wide_session):
+    """Two exports starting on two threads each cap their own query and
+    leave the session setting as it was."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    path, _ = source
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        runs = [
+            pool.submit(_conv_state_export, spark, path, str(tmp_path / f"out{i}"),
+                        str(tmp_path / f"ck{i}"))
+            for i in range(2)
+        ]
+        summaries = [r.result()[1] for r in runs]
+    cores = spark.sparkContext.defaultParallelism
+    assert [m["state_partitions"] for m in summaries] == [cores, cores]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == wide_session
+
+
+def test_scoped_conf_threads_see_own_value_and_restore(spark):
+    """Many threads each scope their own value of one setting: inside its
+    scope a thread reads its own value, and the setting ends where it
+    started."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from stellar_etl_spark.session import scoped_conf
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+
+    def scope(i):
+        for _ in range(5):
+            with scoped_conf(spark, {key: str(100 + i)}):
+                if spark.conf.get(key) != str(100 + i):
+                    return False
+        return True
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            results = [f.result(timeout=60) for f in [pool.submit(scope, i) for i in range(16)]]
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert all(results)
+    assert spark.conf.get(key) == before
 
 
 def test_harness_sentinel_ordered_by_mtime(tmp_path):
