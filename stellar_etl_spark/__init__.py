@@ -11,9 +11,9 @@ Streaming engine over tables of multi-turn agent transcripts:
 - sub-turn units (tool calls / text spans) play the role of operations.
 
 Everything is expressed Spark-first: DataFrame column expressions, windows,
-watermarks, ``applyInPandas`` / ``applyInPandasWithState`` for grouped and
-stateful transforms, and an idempotent exactly-once sink. No per-row Python
-UDFs in any hot path.
+watermarks, native streaming aggregates for stateful transforms,
+``applyInPandas`` for grouped ones, and an idempotent exactly-once sink. No
+per-row Python UDFs in any hot path.
 
 Layout:
 

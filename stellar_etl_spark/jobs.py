@@ -39,7 +39,13 @@ def _common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--checkpoint", required=True)
     p.add_argument("--watermark", default="2 minutes")
     p.add_argument("--max-files-per-trigger", type=int, default=None)
-    p.add_argument("--follow", action="store_true", help="unbounded mode")
+    p.add_argument(
+        "--follow",
+        action="store_true",
+        help="unbounded mode; export_pairs emits a pair once the watermark "
+        "passes the end of its 600 s window, up to 300 s of event time "
+        "after user_ts + 300 s",
+    )
     p.add_argument(
         "--timeout-sec",
         type=int,

@@ -10,8 +10,8 @@
 
 Both are a single ``row_number`` pass — one shuffle on the key. At scale the
 shuffle is unavoidable (dedup is a global property) but AQE splits skewed
-keys; the streaming variants (``dropDuplicatesWithinWatermark`` /
-``applyInPandasWithState``) bound state by the watermark.
+keys; the streaming variant (``dropDuplicatesWithinWatermark``) bounds
+state by the watermark.
 """
 
 from __future__ import annotations

@@ -9,8 +9,11 @@ following assistant/tool turn in the same conversation via
 keep only user rows. One shuffle on ``conv_id``, no self-join, no skew
 amplification (the window sort reuses the partitioning).
 
-The streaming variant (watermark-bounded stream-stream join) lives in
-:mod:`stellar_etl_spark.streaming.pipeline`.
+The streaming variants live in :mod:`stellar_etl_spark.streaming`: the
+first-response pairing as a sliding-window aggregate
+(:func:`stellar_etl_spark.streaming.state.streaming_pairs`), and every
+response in the horizon as a native stream-stream join
+(:func:`stellar_etl_spark.streaming.pipeline.stream_stream_join_pairs`).
 """
 
 from __future__ import annotations

@@ -707,7 +707,6 @@ def _run_streaming_query(
     keys: tuple[str, ...],
     drop_flush_on: str = "conv_id",
     output_mode: str = "append",
-    per_conv_flush: bool = False,
     src_partitions: int = 8,
 ) -> DataFrame:
     """Run a REAL streaming query over the transcripts view and return the
@@ -718,21 +717,12 @@ def _run_streaming_query(
     the file source orders new files by modification time, so with
     ``maxFilesPerTrigger = n_data_files`` the sentinel is processed last) —
     data batch, sentinel batch (advances the watermark past every pending
-    window/state), then Spark's no-data
-    batch fires the event-time timeouts and the state drains. r6: the data
-    write is a hash repartition, NOT ``coalesce(1)`` — coalesce collapses
-    the whole transcripts derivation (scan + window) into ONE task (measured
-    7-12 s of serial write at 10^6 turns vs ~3 s parallel), and the multi-
-    file batch also parallelizes the first micro-batch's scan.
-
-    ``per_conv_flush`` writes one far-future ``role='system'`` row PER
-    conversation instead of the single 'flush' row. Only valid for
-    extractors that ignore system rows (the pairs matcher filters roles
-    before buffering, so outputs are bit-identical): every state group then
-    drains through the cheap DATA-path invocation in the sentinel batch and
-    removes its state, instead of through one event-time-TIMEOUT invocation
-    per group — measured ~14 ms per timed-out group vs ~2 ms per data-path
-    group at 15k conversations (the sentinel batch fell 27 s -> ~4 s).
+    window/state), then Spark's no-data batch closes the windows and the
+    state drains. r6: the data write is a hash repartition, NOT
+    ``coalesce(1)`` — coalesce collapses the whole transcripts derivation
+    (scan + window) into ONE task (measured 7-12 s of serial write at 10^6
+    turns vs ~3 s parallel), and the multi-file batch also parallelizes the
+    first micro-batch's scan.
 
     The result is ``localCheckpoint``-materialized on the executors before
     the temp dirs are removed — the old collect + createDataFrame round
@@ -761,25 +751,10 @@ def _run_streaming_query(
         # parallelism at every scale this harness runs at.
         data_files = _data_files(src)
         n_files = len(data_files)
-        if per_conv_flush:
-            sentinel = (
-                tv.select("conv_id")
-                .distinct()
-                .select(
-                    "conv_id",
-                    F.lit(-1).alias("turn_idx"),
-                    F.lit("system").alias("role"),
-                    F.lit("").alias("text"),
-                    F.lit(None).cast("string").alias("tool"),
-                    (F.lit(max_ts) + F.expr("INTERVAL 30 DAYS")).alias("ts"),
-                )
-                .coalesce(1)
-            )
-        else:
-            sentinel = spark.createDataFrame(
-                [("flush", 0, "system", "", None, max_ts)],
-                "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-            ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAYS"))
+        sentinel = spark.createDataFrame(
+            [("flush", 0, "system", "", None, max_ts)],
+            "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+        ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAYS"))
         sentinel.write.mode("append").parquet(src)
         _stamp_after(src, data_files)
 
@@ -804,9 +779,9 @@ def _run_streaming_query(
 # --- J2/T6/S11 stateful streaming pairs (driver-facing) ----------------------
 def q_streaming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ACTUAL stateful streaming path, driver-hash-checked — not the
-    batch twin: file stream → watermark → ``applyInPandasWithState`` matcher
-    → checkpoint → exactly-once IdempotentSink under Trigger.AvailableNow,
-    then the merged sink read back. Oracle: the bounded range-join SQL (the
+    batch twin: file stream → watermark → native sliding-window pairing
+    aggregate → checkpoint → exactly-once IdempotentSink under
+    Trigger.AvailableNow, then the merged sink read back. Oracle: the bounded range-join SQL (the
     same CEP semantics the stateful operator implements)."""
     from stellar_etl_spark.streaming.state import streaming_pairs
 
@@ -815,11 +790,6 @@ def q_streaming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         transcripts_from_events(spark, sf_dir),
         lambda s: streaming_pairs(s, "2 minutes", 300),
         ("conv_id", "user_turn_idx"),
-        # the matcher filters to user|response roles before buffering, so the
-        # per-conversation system flush rows are invisible to the output —
-        # they exist to drain each group through the cheap data-path
-        # invocation instead of one ~14 ms timeout invocation per group
-        per_conv_flush=True,
     )
 
 
@@ -2311,8 +2281,8 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "effects_details": (q_effects_details, SQL_EFFECTS_DETAILS),
     "pairs": (q_pairs, SQL_PAIRS),
     # the stateful streaming paths themselves (checkpoint + exactly-once sink
-    # under AvailableNow), not their batch twins: custom applyInPandasWithState
-    # matcher, native stream-stream join, native session windows
+    # under AvailableNow), not their batch twins: native sliding-window
+    # pairing, native stream-stream join, native session windows
     "streaming_pairs": (q_streaming_pairs, SQL_STREAMING_PAIRS),
     "stream_join_pairs": (q_stream_join_pairs, SQL_STREAM_JOIN_PAIRS),
     "streaming_sessions": (q_streaming_sessions, SQL_STREAMING_SESSIONS),

@@ -60,7 +60,10 @@ def read_stream(
 ) -> DataFrame:
     """Unbounded read (S2). ``max_files_per_trigger`` bounds per-micro-batch
     intake exactly like the reference's 200-file prefetch buffer
-    (``utils/main.go:241``)."""
+    (``utils/main.go:241``); ``None`` means unbounded, and a value below 1
+    is rejected rather than read as unbounded."""
+    if max_files_per_trigger is not None and max_files_per_trigger < 1:
+        raise ValueError(f"max_files_per_trigger must be >= 1, got {max_files_per_trigger}")
     if path.startswith("iceberg:"):
         reader = spark.readStream.format("iceberg")
         if max_files_per_trigger:

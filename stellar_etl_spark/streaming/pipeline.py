@@ -275,9 +275,9 @@ def stream_stream_join_pairs(
 ) -> DataFrame:
     """All (user, response) pairs within the event-time horizon via Spark's
     native stream-stream inner join (state bounded by watermark + range
-    condition). The *first*-response reduction is the stateful operator in
-    :mod:`stellar_etl_spark.streaming.state`; this join form is the bulk
-    variant (every response in the horizon)."""
+    condition). The *first*-response reduction is the sliding-window
+    aggregate in :mod:`stellar_etl_spark.streaming.state`; this join form
+    is the bulk variant (every response in the horizon)."""
     users = (
         df.where(F.col("role") == "user")
         .select(
@@ -299,9 +299,15 @@ def stream_stream_join_pairs(
         )
         .withWatermark("resp_ts", watermark)
     )
+    # The turn-order test is wrapped in coalesce(..., false): same rows
+    # (a null comparison drops the pair either way), but it is no longer a
+    # bare comparison, which StreamingJoinHelper tries to solve for a
+    # state-eviction bound and fails on, logging an INTERNAL_ERROR stack
+    # trace at every query start. A post-join filter does not help: the
+    # optimizer pushes it back into the inner join's condition.
     cond = (
         (users.conv_id == resps.r_conv_id)
-        & (resps.resp_turn_idx > users.user_turn_idx)
+        & F.coalesce(resps.resp_turn_idx > users.user_turn_idx, F.lit(False))
         & (resps.resp_ts >= users.user_ts)
         & (resps.resp_ts <= users.user_ts + F.expr(f"INTERVAL {horizon_sec} SECONDS"))
     )

@@ -120,6 +120,8 @@ class IdempotentSink:
         # tiny zstd parquet per split dominates the export stage on narrow
         # extractors (measured +75% turns/s from coalesce(32) when CPU-bound).
         # At cluster scale set this ~ total cores; None keeps input shape.
+        if output_partitions is not None and output_partitions < 1:
+            raise ValueError(f"output_partitions must be >= 1, got {output_partitions}")
         self.output_partitions = output_partitions
         # applied inside foreachBatch — the place for operators that need a
         # *batch* plan (window functions etc.) in a streaming job, e.g. the

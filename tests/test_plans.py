@@ -312,20 +312,51 @@ def test_corpus_pipeline_no_degenerate_joins(spark):
 
 
 def test_streaming_conv_state_native_aggregate(spark, tmp_path):
-    """The running conversation accumulator only counts, sums and takes
-    maxima: its executed streaming plan is Spark's state-store aggregate
-    (StateStoreRestore/Save around a partial+final HashAggregate) with no
+    """The running conversation accumulator (update mode) and the pairs
+    export (append mode) are Spark's state-store aggregates
+    (StateStoreRestore/Save around a partial+final aggregate) with no
     pandas-state node and so no Python worker."""
     from stellar_etl_spark.sources.transcripts import read_stream
-    from stellar_etl_spark.streaming.state import running_conversation_state
+    from stellar_etl_spark.streaming.state import running_conversation_state, streaming_pairs
+
+    src = str(tmp_path / "src")
+    write_transcripts(transcripts_df(spark, n_convs=5), src)
+    cases = {
+        "conv_state": (lambda s: running_conversation_state(s, "2 minutes"), "update"),
+        "pairs": (lambda s: streaming_pairs(s, "2 minutes", 300), "append"),
+    }
+    for name, (extractor, mode) in cases.items():
+        q = (
+            extractor(read_stream(spark, src))
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / f"ck-{name}"))
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination(120)
+            plan = q._jsq.explainInternal(False)
+        finally:
+            q.stop()
+        assert "FlatMapGroupsInPandasWithState" not in plan, name
+        assert "StateStoreSave" in plan and "StateStoreRestore" in plan, name
+        assert "Python" not in plan and "ArrowEval" not in plan, name
+
+
+def test_stream_join_keeps_state_cleanup(spark, tmp_path):
+    """The native stream-stream join evicts both sides' state by event time:
+    its executed plan carries a state-cleanup value predicate per side, on
+    the timestamp columns (the turn-order conjunct must not displace them)."""
+    from stellar_etl_spark.sources.transcripts import read_stream
+    from stellar_etl_spark.streaming.pipeline import stream_stream_join_pairs
 
     src = str(tmp_path / "src")
     write_transcripts(transcripts_df(spark, n_convs=5), src)
     q = (
-        running_conversation_state(read_stream(spark, src), "2 minutes")
+        stream_stream_join_pairs(read_stream(spark, src), "2 minutes", 300)
         .writeStream.format("noop")
         .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("update")
         .trigger(availableNow=True)
         .start()
     )
@@ -334,6 +365,5 @@ def test_streaming_conv_state_native_aggregate(spark, tmp_path):
         plan = q._jsq.explainInternal(False)
     finally:
         q.stop()
-    assert "FlatMapGroupsInPandasWithState" not in plan
-    assert "StateStoreSave" in plan and "StateStoreRestore" in plan
-    assert "Python" not in plan and "ArrowEval" not in plan
+    cleanup = re.search(r"state cleanup \[ left value predicate: \((\w+)#.*right value predicate: \((\w+)#", plan)
+    assert cleanup and cleanup.groups() == ("user_ts", "resp_ts"), plan

@@ -2,6 +2,7 @@
 reference's key golden property, ``cmd/export_ledgers_test.go:44-50``),
 stateful operators vs their batch forms, fan-out, validation."""
 
+import datetime as dt
 import os
 import shutil
 
@@ -705,6 +706,78 @@ def test_streaming_pairs_state_bounded_under_disorder(spark, tmp_path):
     assert m["max_state_rows"] < total_rows
     assert m["final_state_rows"] <= m["max_state_rows"]
     assert m["max_state_bytes"] > 0
+
+
+def test_streaming_pairs_window_edges(spark, tmp_path):
+    """The native pairing aggregate assigns each user turn to the one
+    sliding window (``2·lag`` wide, sliding by ``lag``) that holds its whole
+    candidate range. Rows placed on that rule's edges, across two
+    micro-batches, must pair exactly as the batch range join does."""
+    rows = [
+        # a user 1 µs before the 00:05 slide boundary, answered in the next
+        # slide and the next micro-batch
+        ("edge", 0, "user", "q", None, "2026-01-01 00:04:59.999999"),
+        ("edge", 1, "assistant", "a", None, "2026-01-01 00:05:30"),
+        # a response exactly at user_ts + lag counts ...
+        ("exact", 0, "user", "q", None, "2026-01-01 01:00:00"),
+        ("exact", 1, "tool", "a", None, "2026-01-01 01:05:00"),
+        # ... and one at user_ts + lag + 1 µs does not
+        ("over", 0, "user", "q", None, "2026-01-01 02:00:00"),
+        ("over", 1, "assistant", "a", None, "2026-01-01 02:05:00.000001"),
+        # disorder: turn 0 answers nothing (before the user in turn order),
+        # turn 2 comes later in ts than turn 3 but wins on turn_idx
+        ("disorder", 0, "assistant", "early", None, "2026-01-01 03:02:00"),
+        ("disorder", 1, "user", "q", None, "2026-01-01 03:00:00"),
+        ("disorder", 2, "assistant", "a", None, "2026-01-01 03:03:00"),
+        ("disorder", 3, "tool", "b", None, "2026-01-01 03:01:00"),
+    ]
+    # answers only found past the next 8 responses: eight responses before
+    # the user in time, then eight after the lag in a window whose response
+    # times are out of turn order
+    for conv, hour, miss in (("scan_early", 5, "00:30"), ("scan_late", 6, "07:00")):
+        rows.append((conv, 0, "user", "q", None, f"2026-01-01 0{hour}:01:00"))
+        rows += [(conv, i, "tool", "x", None, f"2026-01-01 0{hour}:{miss}") for i in range(1, 9)]
+        rows.append((conv, 9, "assistant", "a", None, f"2026-01-01 0{hour}:01:30"))
+    # one conversation across 7 slides: user/assistant every 130 s, a
+    # system turn that pairs with nothing, and a 400 s gap that leaves a
+    # user unanswered within the lag
+    ts = dt.datetime(2026, 1, 1, 4)
+    for i in range(14):
+        role = "user" if i % 2 == 0 else ("system" if i == 5 else "assistant")
+        ts += dt.timedelta(seconds=400 if i == 9 else 130)
+        rows.append(("long", i, role, f"t{i}", None, str(ts)))
+    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts string"
+    src = str(tmp_path / "src")
+    _write_file_at(spark, src, rows[:1], -60)
+    _write_file_at(spark, src, rows[1:], -30)
+    _write_file_at(spark, src, [("flush", 0, "system", "", None, "2026-06-01 00:00:00")], 0)
+    sink = IdempotentSink(str(tmp_path / "pairs"), ("conv_id", "user_turn_idx"))
+    run_export(spark, src, lambda s: streaming_pairs(s, "2 minutes", 300), sink,
+               str(tmp_path / "ckpt"), max_files_per_trigger=1)
+    # every emitted row, unmerged: a user owned by two windows would show twice
+    got = sink.read_raw(spark).drop("epoch")
+    df = spark.createDataFrame(rows, schema).withColumn("ts", F.col("ts").cast("timestamp"))
+    want = extract_pairs(df, max_lag_sec=300)
+    assert got.count() == want.count() == 3 + 1 + 2 + 7
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    match = {(r["conv_id"], r["user_turn_idx"]): r["resp_turn_idx"] for r in got.collect()}
+    assert match[("edge", 0)] == 1 and match[("exact", 0)] == 1
+    assert match[("over", 0)] is None and match[("disorder", 1)] == 2
+    assert match[("long", 8)] is None and match[("long", 10)] == 11
+    assert match[("scan_early", 0)] == 9 and match[("scan_late", 0)] == 9
+
+
+def test_invalid_intake_settings_rejected(spark, tmp_path):
+    """A file cap or output partition count below 1 is an error, not a
+    silent "unbounded" or "keep input shape"; None keeps the default."""
+    from stellar_etl_spark.sources.transcripts import read_stream
+
+    with pytest.raises(ValueError, match="max_files_per_trigger"):
+        read_stream(spark, str(tmp_path), 0)
+    with pytest.raises(ValueError, match="output_partitions"):
+        IdempotentSink(str(tmp_path / "out"), output_partitions=0)
+    assert IdempotentSink(str(tmp_path / "out"), output_partitions=None).output_partitions is None
+    read_stream(spark, str(tmp_path), None)
 
 
 def _mk_batch(spark, rows):
