@@ -147,7 +147,7 @@ def main(argv: list[str] | None = None) -> int:
         epoch = sink.compact(spark)
         print(json.dumps({
             "compacted_into_epoch": epoch,
-            "rows": sink.lineage()[-1]["rows"],
+            "rows": next(r["rows"] for r in sink.lineage() if r["epoch"] == epoch),
         }))
         return 0
 

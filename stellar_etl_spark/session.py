@@ -20,18 +20,109 @@ Design notes for the 100 TB / 1000-executor target (tested on local[N]):
 - RocksDB state store provider for streaming state (bundled with Spark 4):
   session-window and stream-stream-join state at 10^12-turn scale cannot live
   on the JVM heap.
+- A local session that launches its own JVM reads and writes ``file://``
+  through the NIO filesystem in ``jvm/`` (``fs.file.impl`` and
+  ``fs.AbstractFileSystem.file.impl``). Without the Hadoop native library
+  the stock local filesystem starts a ``chmod`` process for every file and
+  directory it creates and a ``readlink`` process for every
+  ``getFileLinkStatus``: one checkpoint ``createAtomic`` (every offsets,
+  commits and state-changelog file) started 20 processes and took 55 ms,
+  against none and 3.6 ms through system calls. Same files, ``.crc``
+  sidecars, permission bits, atomic rename and fsync. The jar is compiled
+  once per checkout into ``jvm/build/``. A ``spark-submit``'d driver (its
+  JVM already runs), a non-local master, or no ``javac`` keeps the stock
+  filesystem.
 """
 
 from __future__ import annotations
 
 import contextlib
+import glob
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
 import threading
+import zipfile
 from collections.abc import Callable
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+_log = logging.getLogger(__name__)
+_JVM_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+# the py4j gateway of the JVM that get_spark launched with the NIO jar
+_nio_gateway = None
+
+
+def _nio_fs_jar() -> str:
+    """Path of the NIO filesystem jar, compiled on first use. It is named by
+    a hash of the sources and the Hadoop jar, so later runs of the same
+    checkout reuse it, and renamed into place whole, so concurrent builds
+    are safe."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    hadoop = glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar"))
+    sources = sorted(glob.glob(os.path.join(_JVM_SRC, "*.java")))
+    if len(hadoop) != 1 or not sources:
+        raise RuntimeError("no single hadoop-client-api jar, or no sources")
+    digest = hashlib.sha256(f"{os.path.basename(hadoop[0])}:{os.path.getsize(hadoop[0])}".encode())
+    for p in sources:
+        with open(p, "rb") as f:
+            digest.update(f.read())
+    build = os.path.join(_JVM_SRC, "build")
+    jar = os.path.join(build, f"nio-local-fs-{digest.hexdigest()[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    javac = shutil.which("javac")
+    if javac is None:
+        raise RuntimeError("no javac to build it")
+    os.makedirs(build, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=build) as tmp:
+        classes = os.path.join(tmp, "classes")
+        subprocess.run([javac, "--release", "17", "-cp", hadoop[0], "-d", classes, *sources],
+                       check=True, capture_output=True)
+        with zipfile.ZipFile(os.path.join(tmp, "fs.jar"), "w") as z:
+            for root, _, names in os.walk(classes):
+                for n in names:
+                    z.write(os.path.join(root, n), os.path.relpath(os.path.join(root, n), classes))
+        os.replace(os.path.join(tmp, "fs.jar"), jar)
+    return jar
+
+
+def _nio_fs_conf(master: str) -> dict[str, str]:
+    """Settings that register the NIO filesystem, when this call launches
+    the JVM (or reuses one that get_spark launched with the jar) on a local
+    master; otherwise {} and one log line. ``extraClassPath`` only reaches a
+    JVM that is still to be started: a ``spark-submit``'d driver's JVM
+    already runs, and registering the class there fails every file access."""
+    if SparkContext._active_spark_context is not None:
+        return {}  # getOrCreate keeps the running context's filesystem
+    if not master.startswith("local"):
+        why = f"master {master} is not local"
+    elif "PYSPARK_GATEWAY_PORT" in os.environ:
+        why = "the driver JVM already runs (spark-submit)"
+    elif SparkContext._gateway is not None and SparkContext._gateway is not _nio_gateway:
+        why = "the running JVM was started without the NIO jar"
+    else:
+        try:
+            jar = _nio_fs_jar()
+        except (OSError, RuntimeError, subprocess.SubprocessError) as e:
+            why = f"the NIO filesystem is unavailable: {e}"
+        else:
+            return {
+                "spark.driver.extraClassPath": jar,
+                # local-cluster executors are JVMs of their own
+                "spark.executor.extraClassPath": jar,
+                "spark.hadoop.fs.file.impl": "stellaretl.fs.NioLocalFileSystem",
+                "spark.hadoop.fs.AbstractFileSystem.file.impl": "stellaretl.fs.NioLocalFs",
+            }
+    _log.info("stock Hadoop local filesystem: %s", why)
+    return {}
 
 
 def get_spark(
@@ -89,10 +180,18 @@ def get_spark(
             .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
         )
 
+    nio = _nio_fs_conf(master)
+    for k, v in nio.items():
+        builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
+        if k.endswith("extraClassPath") and k in nio:
+            v = nio[k] + os.pathsep + v
         builder = builder.config(k, v)
 
     spark = builder.getOrCreate()
+    if nio:
+        global _nio_gateway
+        _nio_gateway = SparkContext._gateway
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -21,6 +21,9 @@ _STATE_FIELDS = (
     "commitTimeMs",
     "allUpdatesTimeMs",
     "numRowsDroppedByWatermark",
+    # the provider's own timings, e.g. RocksDB's
+    # rocksdbChangeLogWriterCommitLatencyMs and rocksdbCommitFileSyncLatencyMs
+    "customMetrics",
 )
 # how long wait_terminated waits for a run's termination event
 _TERMINATED_TIMEOUT_SEC = 30.0

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -171,8 +172,7 @@ class IdempotentSink:
                 )
             return
         os.makedirs(self.path, exist_ok=True)
-        with open(meta_path, "w") as f:
-            json.dump(current, f)
+        _write_json(meta_path, current)
 
     @classmethod
     def from_meta(cls, path: str, **overrides) -> "IdempotentSink":
@@ -207,8 +207,7 @@ class IdempotentSink:
         lineage_dir = os.path.join(self.path, "_lineage")
         os.makedirs(lineage_dir, exist_ok=True)
         # One file per epoch, deterministic name — replay overwrites it.
-        with open(os.path.join(lineage_dir, f"epoch-{int(epoch_id)}.json"), "w") as f:
-            json.dump(rec, f)
+        _write_json(os.path.join(lineage_dir, f"epoch-{int(epoch_id)}.json"), rec)
 
     # -- read side ------------------------------------------------------
     def has_epochs(self) -> bool:
@@ -417,12 +416,31 @@ class IcebergMergeSink:
             """
 
 
+def _write_json(path: str, obj) -> None:
+    """Write ``obj`` as JSON to a temporary file in the same directory, then
+    rename it over ``path``: a crash part-way through leaves the previous
+    file intact instead of a truncated one."""
+    tmp = os.path.join(
+        os.path.dirname(path),
+        f".{os.path.basename(path)}.{os.getpid()}-{threading.get_ident()}.tmp",
+    )
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
 def _read_lineage(path: str) -> list[dict]:
+    """Lineage records in epoch order (a compacted epoch is negative)."""
     lineage_dir = os.path.join(path, "_lineage")
     if not os.path.isdir(lineage_dir):
         return []
     out = []
-    for name in sorted(os.listdir(lineage_dir)):
-        with open(os.path.join(lineage_dir, name)) as f:
-            out.append(json.load(f))
-    return out
+    for name in os.listdir(lineage_dir):
+        if name.startswith("epoch-") and name.endswith(".json"):
+            with open(os.path.join(lineage_dir, name)) as f:
+                out.append(json.load(f))
+    return sorted(out, key=lambda rec: rec["epoch"])

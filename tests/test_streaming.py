@@ -952,3 +952,57 @@ def test_dedup_orderability_handles_nested_maps(spark, tmp_path):
     sink = IdempotentSink(str(tmp_path / "maps"), ("conv_id", "turn_idx"))
     sink.foreach_batch(df, 0)
     assert sink.read_sink(spark).count() == 2
+
+
+def test_lineage_in_epoch_order(tmp_path):
+    """Lineage is ordered by the integer epoch, not the file name
+    (``epoch-10`` sorts before ``epoch-2``, ``epoch--2`` after ``epoch--1``)."""
+    sink = IdempotentSink(str(tmp_path / "s"))
+    for e in [*range(12), -1, -2]:
+        sink._write_lineage(e, str(tmp_path / "s" / f"epoch={e}"), 10 + e)
+    assert [r["epoch"] for r in sink.lineage()] == list(range(-2, 12))
+
+
+def test_sink_json_survives_crash_mid_write(tmp_path, monkeypatch):
+    """A crash part-way through writing a lineage or metadata file leaves
+    the previous file (or none), never a truncated one."""
+    import json
+
+    import stellar_etl_spark.streaming.sink as sink_mod
+
+    sink = IdempotentSink(str(tmp_path / "s"))
+    sink._write_lineage(0, "p0", 5)
+    good = sink.lineage()
+
+    def crash(obj, f):
+        f.write(json.dumps(obj)[:7])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(sink_mod.json, "dump", crash)
+    with pytest.raises(OSError):
+        sink._write_lineage(0, "p0", 6)
+    with pytest.raises(OSError):
+        sink._write_meta()
+    monkeypatch.undo()
+    assert sink.lineage() == good
+    assert os.listdir(tmp_path / "s" / "_lineage") == ["epoch-0.json"]
+    sink._write_meta()  # no truncated _sink_meta.json left to fail on
+    assert IdempotentSink.from_meta(str(tmp_path / "s")).keys == sink.keys
+
+
+def test_listener_keeps_state_custom_metrics(spark, tmp_path):
+    """Snapshots carry each state operator's customMetrics: with RocksDB the
+    changelog commit latency that dominates a stateful micro-batch."""
+    assert "RocksDB" in spark.conf.get("spark.sql.streaming.stateStore.providerClass")
+    src = str(tmp_path / "src")
+    write_transcripts(transcripts_df(spark, n_convs=6).coalesce(2), src, partition_by_day=False)
+    listener = MetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        _conv_state_export(spark, src, str(tmp_path / "out"), str(tmp_path / "ck"), 1)
+        (run_id,) = {s["runId"] for s in listener.snapshots}
+        assert listener.wait_terminated(run_id)
+    finally:
+        spark.streams.removeListener(listener)
+    ops = [op for s in listener.snapshots for op in s["stateOperators"]]
+    assert ops and all("rocksdbChangeLogWriterCommitLatencyMs" in op["customMetrics"] for op in ops)
