@@ -1,6 +1,6 @@
 # Developer entrypoints (reference has make test / make build, Makefile:18-35)
 
-.PHONY: test test-fast parity bench scaling golden-update
+.PHONY: test test-fast parity bench scaling golden-update submit-smoke
 
 test:
 	python -m pytest tests/ -x -q
@@ -26,3 +26,4 @@ submit-smoke:
 	printf 'import sys\nfrom stellar_etl_spark.jobs import main\nsys.exit(main(sys.argv[1:]))\n' > /tmp/submit_smoke/launch.py
 	cd /tmp/submit_smoke && spark-submit --master 'local[4]' --py-files pkg.zip launch.py generate --out src --n-convs 50
 	cd /tmp/submit_smoke && spark-submit --master 'local[4]' --py-files pkg.zip launch.py export_turns --source src --sink turns --checkpoint ck
+	cd /tmp/submit_smoke && spark-submit --master 'local[4]' --py-files pkg.zip launch.py export_all --source src --sink all --checkpoint ck_all

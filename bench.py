@@ -142,22 +142,19 @@ def main() -> None:
             if fanout:
                 # the export_all shape: one scan fanned to 3 extractors
                 from stellar_etl_spark.operators import extract_effects, extract_units
-                from stellar_etl_spark.streaming.pipeline import run_fanout_export
+                from stellar_etl_spark.streaming.pipeline import FanoutSink
 
-                run_fanout_export(
-                    spark,
-                    src,
-                    {"turns": extract_turns, "units": extract_units, "effects": extract_effects},
-                    os.path.join(tmp, "fan_sink"),
-                    os.path.join(tmp, "ckpt"),
-                    keys={
-                        "turns": ("conv_id", "turn_idx"),
-                        "units": ("conv_id", "turn_idx", "unit_idx"),
-                        "effects": ("conv_id", "turn_idx", "effect_index"),
-                    },
-                    max_files_per_trigger=mfpt,
-                    output_partitions=cpus,
-                )
+                fan = FanoutSink({
+                    name: (ex, IdempotentSink(os.path.join(tmp, "fan_sink", name), keys,
+                                              output_partitions=cpus))
+                    for name, ex, keys in (
+                        ("turns", extract_turns, ("conv_id", "turn_idx")),
+                        ("units", extract_units, ("conv_id", "turn_idx", "unit_idx")),
+                        ("effects", extract_effects, ("conv_id", "turn_idx", "effect_index")),
+                    )
+                })
+                run_export(spark, src, None, fan, os.path.join(tmp, "ckpt"),
+                           max_files_per_trigger=mfpt)
                 metrics = {}
             else:
                 # production default (jobs.py): one output file per core per

@@ -73,19 +73,19 @@ warm = compute_pass()
 # (epoch-keyed IdempotentSink + checkpoint + lineage), output coalesced to
 # one file per core — the batch otherwise lands one tiny zstd file per
 # source split, the measured bottleneck of the export stage
-from stellar_etl_spark.streaming.pipeline import run_fanout_export
+from stellar_etl_spark.streaming.pipeline import FanoutSink, run_export
+from stellar_etl_spark.streaming.sink import IdempotentSink
 tmp = tempfile.mkdtemp()
+fan = FanoutSink({
+    name: (ex, IdempotentSink(tmp + "/out/" + name, keys, output_partitions=int(os.environ["C"])))
+    for name, ex, keys in (
+        ("turns", extract_turns, ("conv_id", "turn_idx")),
+        ("units", extract_units, ("conv_id", "turn_idx", "unit_idx")),
+        ("effects", extract_effects, ("conv_id", "turn_idx", "effect_index")),
+    )
+})
 t0 = time.time()
-run_fanout_export(
-    spark, os.environ["SRC"],
-    {"turns": extract_turns, "units": extract_units, "effects": extract_effects},
-    tmp + "/out", tmp + "/ck",
-    keys={"turns": ("conv_id", "turn_idx"),
-          "units": ("conv_id", "turn_idx", "unit_idx"),
-          "effects": ("conv_id", "turn_idx", "effect_index")},
-    timeout_sec=1800,
-    output_partitions=int(os.environ["C"]),
-)
+run_export(spark, os.environ["SRC"], None, fan, tmp + "/ck", timeout_sec=1800)
 stream_sec = time.time() - t0
 
 print("RESULT " + json.dumps({

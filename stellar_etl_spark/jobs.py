@@ -175,16 +175,15 @@ def main(argv: list[str] | None = None) -> int:
     from stellar_etl_spark.operators.sessions import extract_sessions_streaming
     from stellar_etl_spark.schemas import with_extra_fields
     from stellar_etl_spark.streaming.pipeline import (
+        FanoutSink,
+        lenient_sink,
         run_export,
-        run_fanout_export,
-        run_validated_export,
         validate_rows,
     )
     from stellar_etl_spark.streaming.sink import IdempotentSink
     from stellar_etl_spark.streaming.state import streaming_pairs
 
     extra = dict(kv.split("=", 1) for kv in args.extra_fields)
-    # one resolved deadline for every run mode (fanout + lenient included):
     # --follow defaults to no deadline, bounded runs to 600s + error-on-overrun
     timeout = args.timeout_sec if args.timeout_sec is not None else (
         None if args.follow else 600
@@ -196,8 +195,8 @@ def main(argv: list[str] | None = None) -> int:
         out_parts = None
 
     def wrap(ex):
-        # strict path: fatal-on-invalid guard inline (lenient routing happens
-        # in run_validated_export below, which needs the unvalidated form)
+        # strict path: fatal-on-invalid guard inline (the lenient sink below
+        # routes rows itself, so it needs the unvalidated form)
         def inner(df):
             valid, _ = validate_rows(df, strict=True)
             return with_extra_fields(ex(valid), extra)
@@ -284,27 +283,28 @@ def main(argv: list[str] | None = None) -> int:
         "export_changes": (wrap(lambda df: df), ("conv_id",)),
     }
 
-    if args.cmd == "export_all":
-        fan = {
-            name.removeprefix("export_"): (ex, keys)
-            for name, (ex, keys) in extractors.items()
-            if name in ("export_turns", "export_units", "export_effects")
-        }
-        sinks = run_fanout_export(
-            spark,
-            args.source,
-            {n: ex for n, (ex, _) in fan.items()},
-            args.sink,
-            args.checkpoint,
-            keys={n: k for n, (ex, k) in fan.items()},
-            timeout_sec=timeout,
+    def export(ex, sink, **kw):
+        return run_export(
+            spark, args.source, ex, sink, args.checkpoint,
             max_files_per_trigger=args.max_files_per_trigger,
-            output_partitions=out_parts,
-            fmt=args.format,
+            available_now=not args.follow,
+            timeout_sec=timeout,
+            **kw,
         )
+
+    def out_sink(path, keys, **kw):
+        return IdempotentSink(path, keys, output_partitions=out_parts, fmt=args.format, **kw)
+
+    if args.cmd == "export_all":
+        fan = FanoutSink({
+            name: (extractors[f"export_{name}"][0],
+                   out_sink(f"{args.sink}/{name}", extractors[f"export_{name}"][1]))
+            for name in ("turns", "units", "effects")
+        })
+        export(None, fan)
         print(json.dumps({
             n: (s.read_sink(spark).count() if s.has_epochs() else 0)
-            for n, s in sinks.items()
+            for n, (_, s) in fan.outputs.items()
         }))
         return 0
 
@@ -318,12 +318,9 @@ def main(argv: list[str] | None = None) -> int:
                 f"--lenient is unsupported for {args.cmd} (stateful/windowed); "
                 "pre-clean the input with a lenient export_turns first"
             )
-        sink = IdempotentSink(args.sink, keys, output_partitions=out_parts, fmt=args.format)
+        sink = out_sink(args.sink, keys)
         rejected = IdempotentSink(args.sink + "_rejected", ("conv_id", "turn_idx"))
-        run_validated_export(
-            spark, args.source, plain(raw_extractors[args.cmd]), sink, rejected,
-            args.checkpoint, strict=False, timeout_sec=timeout,
-        )
+        export(None, lenient_sink(plain(raw_extractors[args.cmd]), sink, rejected))
         print(json.dumps({
             "cmd": args.cmd,
             "epochs": len(sink.lineage()),
@@ -332,37 +329,19 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "export_changes":
-        sink = IdempotentSink(
+        sink = out_sink(
             args.sink,
             keys,
             batch_transform=lambda df: compact_last_state(df, ["conv_id"]),
             order_cols=("ts", "turn_idx"),
-            output_partitions=out_parts,
-            fmt=args.format,
         )
     elif args.cmd == "export_dedup":
         # first-seen semantics: the EARLIEST row per conversation must win
         # the merge even when watermark eviction re-emits the key later
-        sink = IdempotentSink(
-            args.sink,
-            keys,
-            order_cols=("first_seen_neg_us",),
-            output_partitions=out_parts,
-            fmt=args.format,
-        )
+        sink = out_sink(args.sink, keys, order_cols=("first_seen_neg_us",))
     else:
-        sink = IdempotentSink(args.sink, keys, output_partitions=out_parts, fmt=args.format)
-    metrics = run_export(
-        spark,
-        args.source,
-        ex,
-        sink,
-        args.checkpoint,
-        max_files_per_trigger=args.max_files_per_trigger,
-        available_now=not args.follow,
-        timeout_sec=timeout,
-        with_listener=True,
-    )
+        sink = out_sink(args.sink, keys)
+    metrics = export(ex, sink, with_listener=True)
     print(json.dumps({"cmd": args.cmd, "metrics": metrics, "epochs": len(sink.lineage())}))
     return 0
 

@@ -66,7 +66,11 @@ def build_training_corpus(
     # survivor relation (id + 3 scalars): it feeds BOTH the near-dup text
     # semi-join and the kept/split/pack chain, and without the cut the full
     # profile scan (the regex-heavy quality/language projection over every
-    # document) executes once per consumer.
+    # document) executes once per consumer. eager=True: building the
+    # corpus DataFrame runs this job at call time, not at the caller's
+    # action. The blocks live on the executors with no lineage behind them,
+    # so losing an executor afterwards fails the build instead of
+    # recomputing; rerun build_training_corpus from the start.
     rn = F.row_number().over(Window.partitionBy("_fp").orderBy(id_col))
     exact = (
         gated.withColumn("_rn", rn)

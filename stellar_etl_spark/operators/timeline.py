@@ -6,8 +6,8 @@ a discriminator column.
 Our analog unions three derived sub-streams of the transcript into one
 timeline table: turn events, tool invocations, and diagnostics (failed turns)
 — ``unionByName`` keeps Catalyst free to push the shared scan down once per
-branch (and ``run_fanout_export`` persists the micro-batch so streaming does
-exactly one scan).
+branch. In a streaming export each branch re-scans the micro-batch; nothing
+caches it.
 """
 
 from __future__ import annotations

@@ -111,73 +111,43 @@ FROM transcripts
 
 # --- S12 GetAllHistory fan-out (driver-facing) -------------------------------
 def q_fanout_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL shared-scan fan-out path (S12, run_fanout_export): one
-    streaming scan feeds three extractor sinks per micro-batch; this query
-    returns the TURNS sink's merged content, which must equal the plain
-    batch turns projection (oracle = SQL_TURNS) — so the fan-out plumbing,
-    multi-sink epoch commit, and merge-on-read are driver-hash-checked
-    (previously pytest-only)."""
-    import shutil
-    import tempfile
+    """The REAL shared-scan fan-out path (S12, ``run_export`` with a
+    ``FanoutSink``): one streaming scan feeds three extractor sinks per
+    micro-batch; this query returns the TURNS sink's merged content, which
+    must equal the plain batch turns projection (oracle = SQL_TURNS) — so the
+    fan-out plumbing, multi-sink epoch commit, and merge-on-read are
+    driver-hash-checked."""
+    from stellar_etl_spark.streaming.pipeline import FanoutSink, run_export
+    from stellar_etl_spark.streaming.sink import IdempotentSink
 
-    from stellar_etl_spark.generator import write_transcripts
-    from stellar_etl_spark.operators import extract_effects, extract_units
-    from stellar_etl_spark.streaming.pipeline import run_fanout_export
+    # the written table carries only the TRANSCRIPTS schema; the
+    # SQL-reproducible conv_seq is recoverable from the conv_id format
+    # ('conv_%08d' of the same number). try_cast: the flush row's '' is not
+    # a number, and CAST raises on it under ANSI.
+    seq = F.expr("try_cast(substring(conv_id, 6) AS BIGINT)")
 
-    work = tempfile.mkdtemp(prefix="fanout_q_")
-    try:
-        src = f"{work}/src"
-        # r6: hash repartition, not coalesce(4) — coalesce collapses the
-        # transcripts derivation (scan + turn_idx window) into 4 tasks for
-        # the WRITE too. 32 files because the sink's output coalesce bounds
-        # each micro-batch's WHOLE extractor computation at
-        # min(batch_files, output_partitions) tasks (coalesce propagates up
-        # to the scan): 8f/out4 ran the three extractors 4-wide (19.7 s
-        # stream at sf1.0), 32f/out16 runs them 16-wide (7.8 s).
-        write_transcripts(
-            transcripts_from_events(spark, sf_dir).repartition(32, F.col("conv_id")),
-            src,
-            partition_by_day=False,
-        )
-        n_files = len(_data_files(src))
-        # the written table carries only the TRANSCRIPTS schema; the
-        # SQL-reproducible conv_seq is recoverable from the conv_id format
-        # ('conv_%08d' of the same number)
-        seq = F.expr("CAST(substring(conv_id, 6) AS BIGINT)")
-        # 16 (not 8): the 3-extractor fan-out is the one compute-bound
-        # harness — A/B at sf0.1 showed 8/16/32 within noise, so keep the
-        # parallelism headroom while still trimming state/commit overhead
-        with _harness_partitions(spark, 16):
-            sinks = run_fanout_export(
-                spark,
-                src,
-                {
-                    "turns": lambda df: extract_turns(df, conv_seq=seq),
-                    "units": lambda df: extract_units(df, conv_seq=seq),
-                    "effects": lambda df: extract_effects(df, conv_seq=seq),
-                },
-                f"{work}/out",
-                f"{work}/ck",
-                keys={
-                    "turns": ("conv_id", "turn_idx"),
-                    "units": ("conv_id", "turn_idx", "unit_idx"),
-                    "effects": ("conv_id", "turn_idx", "effect_index"),
-                },
-                # two micro-batches (the multi-epoch commit path stays
-                # exercised) over the data files
-                max_files_per_trigger=(n_files + 1) // 2,
-                output_partitions=16,
+    def run(src: str, work: str, n_files: int) -> DataFrame:
+        # 16 output files: the sink's output coalesce bounds each
+        # micro-batch's WHOLE extractor computation at min(batch_files,
+        # output_partitions) tasks (coalesce propagates up to the scan):
+        # 8 files/4 outputs ran the three extractors 4-wide (19.7 s stream at
+        # sf1.0), 32 files/16 outputs runs them 16-wide (7.8 s).
+        fan = FanoutSink({
+            name: (lambda df, ex=ex: ex(df, conv_seq=seq),
+                   IdempotentSink(f"{work}/{name}", keys, output_partitions=16))
+            for name, ex, keys in (
+                ("turns", extract_turns, ("conv_id", "turn_idx")),
+                ("units", extract_units, ("conv_id", "turn_idx", "unit_idx")),
+                ("effects", extract_effects, ("conv_id", "turn_idx", "effect_index")),
             )
-        out = sinks["turns"].read_sink(spark)
-        # r6: executor-side materialization — the old limit+collect+
-        # createDataFrame moved 10^6 wide rows driver-side through pickle
-        # twice (~15 s at bench scale; guide §5)
-        res = out.localCheckpoint(eager=True)
-        if res.count() > 1_000_000:
-            raise RuntimeError("fanout harness is for driver-check scale only")
-        return res
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        })
+        # two micro-batches, so the multi-epoch commit path stays
+        # exercised; the sentinel rides the second
+        run_export(spark, src, None, fan, f"{work}/ck",
+                   max_files_per_trigger=(n_files + 2) // 2)
+        return fan["turns"].read_sink(spark)
+
+    return _streaming_harness(spark, transcripts_from_events(spark, sf_dir), 32, run)
 
 
 # --- T3 raw passthrough (TransformLedgerTransaction,
@@ -644,7 +614,7 @@ WHERE role = 'user'
 
 
 # --- stateful streaming harness (driver-facing) ------------------------------
-def _harness_partitions(spark: SparkSession, n: int = 8):
+def _harness_partitions(spark: SparkSession):
     """Shrink shuffle/state partitions for the driver-check harnesses only.
 
     Each state partition is a full state-store instance writing delta +
@@ -655,8 +625,9 @@ def _harness_partitions(spark: SparkSession, n: int = 8):
     tests), so 8 partitions buys the same green rows ~4x cheaper. Fresh
     checkpoints each run, so the state-partition count never conflicts.
     ``run_export`` further caps the state partitions at the core count, so
-    below 8 cores those harnesses run one per core; the fan-out harness
-    (``run_fanout_export``, no state) keeps its 16.
+    below 8 cores the stateful harnesses run one per core. The fan-out
+    harness holds no state and runs its extractors at these 8: an A/B at
+    sf0.1 put 8, 16 and 32 within noise.
 
     r6: the harness also runs on the HEAP-BACKED state store. The session
     default stays RocksDB — mandatory where streaming state exceeds the
@@ -669,7 +640,7 @@ def _harness_partitions(spark: SparkSession, n: int = 8):
     Same scale-dependent-parameter class as the partition shrink; both
     restore on exit."""
     return scoped_conf(spark, {
-        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.shuffle.partitions": "8",
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
     })
@@ -700,25 +671,24 @@ def _stamp_after(src: str, data_files: list[str]) -> None:
             os.utime(os.path.join(src, f), (later, later))
 
 
-def _run_streaming_query(
+def _streaming_harness(
     spark: SparkSession,
     tv: DataFrame,
-    extractor,
-    keys: tuple[str, ...],
-    drop_flush_on: str = "conv_id",
-    output_mode: str = "append",
-    src_partitions: int = 8,
+    src_files: int,
+    run: Callable[[str, str, int], DataFrame],
 ) -> DataFrame:
-    """Run a REAL streaming query over the transcripts view and return the
-    merged sink contents — the oracle harness for the stateful operators.
+    """Run a REAL streaming query over the transcripts view and return its
+    sink contents, without the flush row — the shell of every streaming
+    oracle harness. ``run(src, work, n_data_files)`` runs the query under
+    :func:`_harness_partitions` and returns the sink read-back.
 
-    Layout: ``src_partitions`` hash(conv_id) data files + a far-future
+    Layout: ``src_files`` hash(conv_id) data files + a far-future
     flush-sentinel file (its modification time is set past every data file;
     the file source orders new files by modification time, so with
-    ``maxFilesPerTrigger = n_data_files`` the sentinel is processed last) —
-    data batch, sentinel batch (advances the watermark past every pending
-    window/state), then Spark's no-data batch closes the windows and the
-    state drains. r6: the data write is a hash repartition, NOT
+    ``maxFilesPerTrigger <= n_data_files`` the sentinel is processed last) —
+    data batch(es), sentinel batch (advances the watermark past every
+    pending window/state), then Spark's no-data batch closes the windows and
+    the state drains. r6: the data write is a hash repartition, NOT
     ``coalesce(1)`` — coalesce collapses the whole transcripts derivation
     (scan + window) into ONE task (measured 7-12 s of serial write at 10^6
     turns vs ~3 s parallel), and the multi-file batch also parallelizes the
@@ -733,37 +703,25 @@ def _run_streaming_query(
     import tempfile
 
     from stellar_etl_spark.generator import write_transcripts
-    from stellar_etl_spark.streaming.pipeline import run_export
-    from stellar_etl_spark.streaming.sink import IdempotentSink
 
     work = tempfile.mkdtemp(prefix="streaming_q_")
     try:
         src = f"{work}/src"
         write_transcripts(
-            tv.repartition(src_partitions, F.col("conv_id")), src, partition_by_day=False
+            tv.repartition(src_files, F.col("conv_id")), src, partition_by_day=False
         )
-        max_ts = tv.agg(F.max("ts")).collect()[0][0]
-        # State partitions stay at the _harness_partitions default (8),
-        # capped at the core count by run_export: the scale-adaptive
-        # alternative (32 at 10^6 rows) was MEASURED SLOWER — 46->55 s
-        # (pairs), 20->26 s (conv_state), 19->23 s (join) at sf1.0 —
-        # per-partition state-store/commit fixed cost beats the extra
-        # parallelism at every scale this harness runs at.
+        # from the written files: re-deriving tv would re-run its scan
+        max_ts = spark.read.parquet(src).agg(F.max("ts")).collect()[0][0]
         data_files = _data_files(src)
-        n_files = len(data_files)
         sentinel = spark.createDataFrame(
             [("flush", 0, "system", "", None, max_ts)],
             "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
         ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAYS"))
         sentinel.write.mode("append").parquet(src)
         _stamp_after(src, data_files)
-
-        sink = IdempotentSink(f"{work}/out", keys, output_partitions=4)
         with _harness_partitions(spark):
-            run_export(spark, src, extractor, sink, f"{work}/ckpt",
-                       max_files_per_trigger=n_files, output_mode=output_mode)
-        out = sink.read_sink(spark).where(F.col(drop_flush_on) != "flush")
-        res = out.localCheckpoint(eager=True)
+            out = run(src, work, len(data_files))
+        res = out.where(F.col("conv_id") != "flush").localCheckpoint(eager=True)
         # the cap documents this harness's driver-check scale; with the
         # executor-side materialization it is a count, not a driver collect
         if res.count() > 1_000_000:
@@ -774,6 +732,35 @@ def _run_streaming_query(
         return res
     finally:
         shutil.rmtree(work, ignore_errors=True)
+
+
+def _run_streaming_query(
+    spark: SparkSession,
+    tv: DataFrame,
+    extractor,
+    keys: tuple[str, ...],
+    output_mode: str = "append",
+) -> DataFrame:
+    """The oracle harness for the stateful operators: ``extractor`` on the
+    stream of 8 source files, all data files in one micro-batch, into one
+    sink.
+
+    State partitions stay at the _harness_partitions value (8), capped at
+    the core count by run_export: the scale-adaptive alternative (32 at
+    10^6 rows) was MEASURED SLOWER — 46->55 s (pairs), 20->26 s
+    (conv_state), 19->23 s (join) at sf1.0 — per-partition
+    state-store/commit fixed cost beats the extra parallelism at every scale
+    this harness runs at."""
+    from stellar_etl_spark.streaming.pipeline import run_export
+    from stellar_etl_spark.streaming.sink import IdempotentSink
+
+    def run(src: str, work: str, n_files: int) -> DataFrame:
+        sink = IdempotentSink(f"{work}/out", keys, output_partitions=4)
+        run_export(spark, src, extractor, sink, f"{work}/ckpt",
+                   max_files_per_trigger=n_files, output_mode=output_mode)
+        return sink.read_sink(spark)
+
+    return _streaming_harness(spark, tv, 8, run)
 
 
 # --- J2/T6/S11 stateful streaming pairs (driver-facing) ----------------------

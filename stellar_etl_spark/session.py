@@ -13,8 +13,7 @@ Design notes for the 100 TB / 1000-executor target (tested on local[N]):
 - ``spark.sql.shuffle.partitions`` defaults to ``max(cores, 8)`` here; on a
   real cluster set it ~2-3x total cores (AQE coalesces the excess).
   ``streaming.pipeline.run_export`` caps its query's state partitions at the
-  core count (``pipeline._start``), because AQE cannot coalesce state
-  partitions.
+  core count, because AQE cannot coalesce state partitions.
 - Arrow enabled for all pandas UDF exchange; batch size bounded so grouped-map
   state per task stays in memory.
 - RocksDB state store provider for streaming state (bundled with Spark 4):

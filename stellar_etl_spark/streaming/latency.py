@@ -27,6 +27,15 @@ from stellar_etl_spark.generator import transcripts_df
 from stellar_etl_spark.schemas import TRANSCRIPTS
 from stellar_etl_spark.session import scoped_conf
 
+# The windowed aggregate holds a few hundred tiny windows: running its state
+# on the session's shuffle partitioning (max(cores, 8), 32 on a 32-core
+# session) pays one state store load+commit per partition per 250 ms
+# trigger, which IS most of the close latency at this size. 8 partitions
+# whatever the core count; on a real deployment size it to the stateful
+# load. The setting is scoped to ``start()``, where Spark fixes the query's
+# state partitions.
+AGG_PARTITIONS = 8
+
 
 def measure_window_close_latency(
     spark: SparkSession,
@@ -36,7 +45,6 @@ def measure_window_close_latency(
     feed_slices: int = 6,
     feed_interval_sec: float = 2.0,
     timeout_sec: int = 180,
-    agg_partitions: int = 8,
 ) -> dict:
     tmp = tempfile.mkdtemp(prefix="latency_")
     src = os.path.join(tmp, "src")
@@ -79,14 +87,7 @@ def measure_window_close_latency(
             arrivals.append((time.time(), mx.timestamp()))
 
     append_slice(0)
-    # The windowed aggregate holds a few hundred tiny windows: running its
-    # state on the session's shuffle partitioning (max(cores, 8), 32 on a
-    # 32-core session) pays one state store load+commit per partition per
-    # 250 ms trigger, which IS most of the close latency at this size.
-    # ``agg_partitions`` (8) fixes the count whatever the core count; on a
-    # real deployment size it to the stateful load. The setting is scoped
-    # to ``start()``, where Spark fixes the query's state partitions.
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(agg_partitions)}):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(AGG_PARTITIONS)}):
         q = (
             agg.writeStream.foreachBatch(on_batch)
             .option("checkpointLocation", os.path.join(tmp, "ck"))

@@ -1,7 +1,8 @@
 """Streaming pipeline runner — the ``runLedgerBatchExport`` analog
-(``cmd/ledger_batch_export.go:33-96``): source → extractor(s) → windowed
-batches → idempotent sink, with checkpoint-resume, strict/lenient error
-routing and a shared-scan fan-out mode.
+(``cmd/ledger_batch_export.go:33-96``): source → extractor → windowed
+batches → idempotent sink, with checkpoint-resume. Every export, the
+shared-scan fan-out and the lenient export included, runs through the one
+:func:`run_export`; they differ only in the sink they pass.
 
 Reference semantics preserved:
 
@@ -13,10 +14,10 @@ Reference semantics preserved:
 - one deterministic output unit per micro-batch ≈ epoch-keyed idempotent
   writes (:mod:`stellar_etl_spark.streaming.sink`);
 - ``GetAllHistory`` shared scan fan-out (``input/all_history.go:23-100``) ≈
-  ``foreachBatch`` persisting the input once and feeding N extractors;
+  a :class:`FanoutSink` feeding each micro-batch to N extractors and sinks;
 - strict vs lenient export (``--strict-export``, ``utils/logger.go:17-23``):
-  strict raises on invalid rows, lenient routes them to a rejected-rows side
-  output with the failure reason.
+  strict raises on invalid rows, lenient (:func:`lenient_sink`) routes them
+  to a rejected-rows side output with the failure reason.
 """
 
 from __future__ import annotations
@@ -35,13 +36,42 @@ from stellar_etl_spark.streaming.sink import IdempotentSink
 Extractor = Callable[[DataFrame], DataFrame]
 
 
+class FanoutSink:
+    """S12 GetAllHistory: every output of one micro-batch, ``{name:
+    (extractor, sink)}``. The extractors run on the batch plan, and each
+    re-scans the micro-batch: measured on this engine, extractors reading
+    Spark's in-memory cache of it ran 3-5x slower than re-scanning parquet
+    (the vectorized reader and page cache beat the cache's columnar-to-row
+    path)."""
+
+    def __init__(self, outputs: dict[str, tuple[Extractor, IdempotentSink]]):
+        self.outputs = outputs
+
+    def __getitem__(self, name: str) -> IdempotentSink:
+        return self.outputs[name][1]
+
+    def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        for ex, sink in self.outputs.values():
+            sink.foreach_batch(ex(batch_df), epoch_id)
+
+
+def lenient_sink(extractor: Extractor, sink: IdempotentSink,
+                 rejected_sink: IdempotentSink) -> FanoutSink:
+    """K5 lenient export: per micro-batch, the valid rows go through
+    ``extractor`` to ``sink`` and the rejected rows, with their failure
+    reason, to ``rejected_sink``, instead of killing the query."""
+    return FanoutSink({
+        "valid": (lambda df: extractor(validate_rows(df, strict=False)[0]), sink),
+        "rejected": (lambda df: validate_rows(df, strict=False)[1], rejected_sink),
+    })
+
+
 def run_export(
     spark: SparkSession,
     source_path: str,
-    extractor: Extractor,
-    sink: IdempotentSink,
+    extractor: Extractor | None,
+    sink,
     checkpoint: str,
-    watermark: str | None = None,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
     timeout_sec: int | None = 600,
@@ -50,12 +80,31 @@ def run_export(
 ) -> dict:
     """Run one streaming export to completion (AvailableNow) or until timeout.
 
+    ``sink`` is any object with ``foreach_batch(df, epoch_id)``: an
+    :class:`IdempotentSink`, or a :class:`FanoutSink` with
+    ``extractor=None``, which streams the bare file source and runs its
+    extractors on each micro-batch.
+
     ``timeout_sec=None`` waits without deadline — the right setting for
     unbounded (--follow) runs, which must not silently stop after 10 minutes.
     A BOUNDED run that is still active at the deadline raises TimeoutError
     (truncating an AvailableNow export silently would under-report);
     an unbounded run with an explicit timeout stops cleanly at the deadline
     (the documented bounded-follow used by tests).
+
+    The query starts with its state partitions capped at the cores that run
+    it. A query takes its state-partition count from
+    ``spark.sql.shuffle.partitions`` at ``start()`` and keeps it in its
+    checkpoint; AQE does not coalesce state partitions. Above the core count
+    each micro-batch's stateful stage runs in more than one serial task wave,
+    and every state partition pays a task start-up and a state-store load and
+    commit: on 4 cores with the session's 8 partitions the cap took the pairs
+    export from 8.2-8.8 s to 4.8-5.9 s. The session value is restored once
+    the query has started: batch queries never see the cap, and a resumed
+    checkpoint keeps the count it was created with. With ``extractor=None``
+    the streamed plan is the bare file source, which holds no state, and the
+    query starts uncapped: the cap would only narrow the shuffles of the
+    extractors that run on each micro-batch.
 
     Returns the metrics summary. Killing the process and re-calling with the
     same checkpoint resumes from the last committed offset and rewrites any
@@ -66,9 +115,7 @@ def run_export(
         spark.streams.addListener(listener)
     try:
         src = read_stream(spark, source_path, max_files_per_trigger)
-        if watermark:
-            src = src.withWatermark("ts", watermark)
-        out = extractor(src)
+        out = src if extractor is None else extractor(src)
         writer = (
             out.writeStream.foreachBatch(sink.foreach_batch)
             .option("checkpointLocation", checkpoint)
@@ -76,17 +123,23 @@ def run_export(
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
-        q = _start(spark, writer)
-        if available_now:
-            _await_bounded(q, timeout_sec)
-        elif timeout_sec is None:
+        cores = spark.sparkContext.defaultParallelism
+        cap = {} if extractor is None else {
+            "spark.sql.shuffle.partitions": lambda old: str(min(int(old), cores))
+        }
+        with scoped_conf(spark, cap):
+            q = writer.start()
+        if timeout_sec is None:
             q.awaitTermination()
         else:
-            # unbounded run with an explicit deadline stops cleanly at it —
-            # the documented bounded-follow mode used by tests
             q.awaitTermination(timeout_sec)
             if q.isActive:
                 q.stop()
+                if available_now:
+                    raise TimeoutError(
+                        f"bounded export still running after {timeout_sec}s — "
+                        "raise timeout_sec (or pass None) instead of truncating"
+                    )
         if not listener:
             return {}
         if not listener.wait_terminated(q.runId):
@@ -95,136 +148,6 @@ def run_export(
     finally:
         if listener:
             spark.streams.removeListener(listener)
-
-
-def run_fanout_export(
-    spark: SparkSession,
-    source_path: str,
-    extractors: dict[str, Extractor],
-    sink_root: str,
-    checkpoint: str,
-    keys: dict[str, tuple[str, ...]] | None = None,
-    timeout_sec: int | None = 600,
-    max_files_per_trigger: int | None = None,
-    persist_batch: bool = False,
-    output_partitions: int | None = None,
-    fmt: str = "parquet",
-) -> dict[str, IdempotentSink]:
-    """S12 GetAllHistory: one scan, N extractor outputs per micro-batch.
-
-    ``persist_batch`` caches the micro-batch so each extractor reads it once
-    — worth it when the source scan is expensive (remote object store). For
-    local/columnar sources leave it off: measured on this engine, extractors
-    reading Spark's in-memory cache run 3-5x SLOWER than re-scanning parquet
-    (the vectorized reader + page cache beat the cache's columnar→row path),
-    so the default re-scans.
-
-    ``timeout_sec`` follows :func:`run_export` semantics exactly: ``None``
-    waits without deadline; a bounded (AvailableNow) run still active at the
-    deadline raises TimeoutError instead of silently truncating and then
-    reporting per-sink counts as if complete.
-
-    ``output_partitions`` coalesces each extractor's output before the write —
-    the input micro-batch arrives in one partition per source file (thousands
-    for a day-partitioned table), and writing one tiny zstd file per split is
-    the measured bottleneck of the export stage (+75% throughput from
-    ``coalesce(32)`` when CPU-bound, BENCH/ADDENDA.md)."""
-    sinks = {
-        name: IdempotentSink(
-            f"{sink_root}/{name}",
-            (keys or {}).get(name, ("conv_id", "turn_idx")),
-            output_partitions=output_partitions,
-            fmt=fmt,
-        )
-        for name in extractors
-    }
-
-    def fanout(batch_df: DataFrame, epoch_id: int) -> None:
-        if persist_batch:
-            batch_df.persist()
-        try:
-            for name, ex in extractors.items():
-                sinks[name].foreach_batch(ex(batch_df), epoch_id)
-        finally:
-            if persist_batch:
-                batch_df.unpersist()
-
-    src = read_stream(spark, source_path, max_files_per_trigger)
-    q = (
-        src.writeStream.foreachBatch(fanout)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, timeout_sec)
-    return sinks
-
-
-def _start(spark: SparkSession, writer):
-    """Start a streaming query with its state partitions capped at the
-    cores that run it.
-
-    A query takes its state-partition count from
-    ``spark.sql.shuffle.partitions`` at ``start()`` and keeps it in its
-    checkpoint; AQE does not coalesce state partitions. Above the core count
-    each micro-batch's stateful stage runs in more than one serial task wave,
-    and every state partition pays the Python runner's per-task start-up
-    (150-370 ms measured) and a state-store load and commit. On 4 cores with
-    the session's 8 partitions the cap took the pairs export from 8.2-8.8 s
-    to 4.8-5.9 s. The session value is restored once the query has started:
-    batch queries never see the cap, and a resumed checkpoint keeps the
-    count it was created with. Only ``run_export`` starts through here: the
-    fan-out and validated exports hold no state, and the cap would only
-    narrow their extractors' shuffles."""
-    cap = spark.sparkContext.defaultParallelism
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": lambda old: str(min(int(old), cap))}):
-        return writer.start()
-
-
-def _await_bounded(q, timeout_sec: int | None) -> None:
-    """Wait for a bounded (AvailableNow) query; overrunning an explicit
-    deadline is an ERROR, never a silent truncation."""
-    if timeout_sec is None:
-        q.awaitTermination()
-        return
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(
-            f"bounded export still running after {timeout_sec}s — "
-            "raise timeout_sec (or pass None) instead of truncating"
-        )
-
-
-def run_validated_export(
-    spark: SparkSession,
-    source_path: str,
-    extractor: Extractor,
-    sink: IdempotentSink,
-    rejected_sink: IdempotentSink,
-    checkpoint: str,
-    strict: bool = False,
-    timeout_sec: int | None = 600,
-) -> None:
-    """K5 lenient mode, end-to-end: per micro-batch, split valid/rejected
-    (validation runs on the batch plan, so rejected rows route to their own
-    epoch-keyed sink with the failure reason instead of killing the query;
-    strict=True keeps the reference's fatal behavior)."""
-
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        valid, rejected = validate_rows(batch_df, strict=strict)
-        sink.foreach_batch(extractor(valid), epoch_id)
-        if rejected is not None:
-            rejected_sink.foreach_batch(rejected, epoch_id)
-
-    src = read_stream(spark, source_path)
-    q = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, timeout_sec)
 
 
 # -- K5 strict/lenient row validation ---------------------------------------

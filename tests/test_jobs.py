@@ -238,3 +238,55 @@ def test_export_dedup_first_seen_survives_state_eviction(spark, tmp_path, capsys
     merged = {r["conv_id"]: r for r in sink.read_sink(spark).collect()}
     assert merged["X"]["turn_idx"] == 0 and merged["X"]["text"] == "first"
     assert merged["Y"]["turn_idx"] == 0
+
+
+def test_export_all_follow_picks_up_appended_file(spark, tmp_path, capsys):
+    """``export_all --follow`` keeps its query running: a file appended
+    after the first committed epoch lands in the sinks before the
+    deadline stops the run."""
+    import os
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyspark.sql.functions as F
+
+    from stellar_etl_spark.generator import transcripts_df, write_transcripts
+
+    src, sink = str(tmp_path / "src"), str(tmp_path / "all")
+    first = transcripts_df(spark, n_convs=6)
+    write_transcripts(first, src, partition_by_day=False)
+    with ThreadPoolExecutor(1) as pool:
+        run = pool.submit(jobs.main, [
+            "export_all", "--follow", "--timeout-sec", "45", "--source", src,
+            "--sink", sink, "--checkpoint", str(tmp_path / "ck"),
+        ])
+        deadline = time.time() + 30
+        while not os.path.isdir(f"{sink}/effects/_lineage") and time.time() < deadline:
+            time.sleep(0.2)
+        assert os.path.isdir(f"{sink}/effects/_lineage"), "no epoch committed"
+        later = transcripts_df(spark, n_convs=4, seed=7).withColumn(
+            "conv_id", F.concat(F.col("conv_id"), F.lit("_late")))
+        write_transcripts(later, src, partition_by_day=False, mode="append")
+        assert run.result(timeout=120) == 0
+    counts = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert counts["turns"] == first.count() + later.count()
+
+
+def test_lenient_export_honours_max_files_per_trigger(spark, tmp_path, capsys):
+    """``export_turns --lenient --max-files-per-trigger 1`` over k source
+    files commits k epochs."""
+    import os
+
+    from stellar_etl_spark.generator import transcripts_df, write_transcripts
+
+    src = str(tmp_path / "src")
+    write_transcripts(transcripts_df(spark, n_convs=12).repartition(3, "conv_id"), src,
+                      partition_by_day=False)
+    k = len([f for f in os.listdir(src) if f.startswith("part-")])
+    assert k > 1
+    jobs.main(["export_turns", "--lenient", "--max-files-per-trigger", "1",
+               "--source", src, "--sink", str(tmp_path / "t"),
+               "--checkpoint", str(tmp_path / "ck")])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["epochs"] == k
+    assert out["rejected_rows"] == 0

@@ -13,8 +13,8 @@ from stellar_etl_spark.generator import transcripts_df, write_transcripts
 from stellar_etl_spark.operators import extract_pairs, extract_turns
 from stellar_etl_spark.operators.sessions import extract_sessions, extract_sessions_streaming
 from stellar_etl_spark.streaming.pipeline import (
+    FanoutSink,
     run_export,
-    run_fanout_export,
     stream_stream_join_pairs,
     validate_rows,
 )
@@ -262,16 +262,33 @@ def _conv_state_export(spark, src, out, ck, mfpt=None):
     return sink, m
 
 
+class _ShufflePartitionsSeen:
+    """A sink wrapper that records the shuffle-partition setting each
+    micro-batch's session runs with."""
+
+    def __init__(self, sink):
+        self.sink, self.seen = sink, set()
+
+    def foreach_batch(self, batch_df, epoch_id):
+        self.seen.add(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        self.sink.foreach_batch(batch_df, epoch_id)
+
+
 def test_export_caps_state_partitions_at_cores(spark, source, tmp_path, wide_session):
-    """A query started by run_export runs one state partition per core; the
-    session setting is back at its value once the query has started."""
+    """A query started by run_export with an extractor runs one state
+    partition per core, and its micro-batches run at the capped setting; a
+    FanoutSink run (no extractor, no state) starts uncapped. The session
+    setting is back at its value once each query has started."""
     path, _ = source
     listener = MetricsListener()
+    capped = _ShufflePartitionsSeen(IdempotentSink(str(tmp_path / "out"), ("conv_id",)))
     spark.streams.addListener(listener)
     try:
         # run_export's own listener, registered after this one, has seen
         # the run's last event when it returns, so this one has too
-        _conv_state_export(spark, path, str(tmp_path / "out"), str(tmp_path / "ck"), 2)
+        run_export(spark, path, lambda s: running_conversation_state(s, "2 minutes"),
+                   capped, str(tmp_path / "ck"), max_files_per_trigger=2,
+                   output_mode="update", with_listener=True)
         (run_id,) = {s["runId"] for s in listener.snapshots}
         assert listener.wait_terminated(run_id)
     finally:
@@ -281,6 +298,13 @@ def test_export_caps_state_partitions_at_cores(spark, source, tmp_path, wide_ses
                  for s in listener.snapshots for op in s["stateOperators"]]
     assert len(listener.snapshots) >= 2 and set(instances) == {cores}
     assert listener.summary(run_id)["state_partitions"] == cores
+    assert capped.seen == {str(cores)}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == wide_session
+
+    uncapped = _ShufflePartitionsSeen(IdempotentSink(str(tmp_path / "fan")))
+    run_export(spark, path, None, FanoutSink({"turns": (extract_turns, uncapped)}),
+               str(tmp_path / "ck_fan"), max_files_per_trigger=2)
+    assert uncapped.seen == {wide_session}
     assert spark.conf.get("spark.sql.shuffle.partitions") == wide_session
 
 
@@ -393,12 +417,11 @@ def test_fanout_single_scan(spark, source, tmp_path):
     path, df = source
     from stellar_etl_spark.operators import extract_conversations
 
-    sinks = run_fanout_export(
-        spark, path,
-        {"turns": extract_turns, "convs": extract_conversations},
-        str(tmp_path / "fan"), str(tmp_path / "ckpt"),
-        keys={"turns": ("conv_id", "turn_idx"), "convs": ("conv_id",)},
-    )
+    sinks = FanoutSink({
+        "turns": (extract_turns, IdempotentSink(str(tmp_path / "fan/turns"))),
+        "convs": (extract_conversations, IdempotentSink(str(tmp_path / "fan/convs"), ("conv_id",))),
+    })
+    run_export(spark, path, None, sinks, str(tmp_path / "ckpt"))
     assert sinks["turns"].read_sink(spark).count() == df.count()
     # per-epoch conv summaries: merge-on-read keeps one row per conv
     assert sinks["convs"].read_sink(spark).count() == df.select("conv_id").distinct().count()
@@ -487,7 +510,7 @@ def test_window_close_latency_measurement(spark):
 
 
 def test_validated_export_routes_rejected(spark, tmp_path):
-    from stellar_etl_spark.streaming.pipeline import run_validated_export
+    from stellar_etl_spark.streaming.pipeline import lenient_sink
 
     good = transcripts_df(spark, n_convs=10)
     bad = spark.createDataFrame(
@@ -500,7 +523,7 @@ def test_validated_export_routes_rejected(spark, tmp_path):
 
     sink = IdempotentSink(str(tmp_path / "out"), ("conv_id", "turn_idx"))
     rej = IdempotentSink(str(tmp_path / "rej"), ("turn_idx",))
-    run_validated_export(spark, path, extract_turns, sink, rej, str(tmp_path / "ckpt"))
+    run_export(spark, path, None, lenient_sink(extract_turns, sink, rej), str(tmp_path / "ckpt"))
     assert sink.read_sink(spark).count() == good.count()
     rejected = rej.read_raw(spark)
     assert rejected.count() == 2
