@@ -1,6 +1,6 @@
 # Developer entrypoints (reference has make test / make build, Makefile:18-35)
 
-.PHONY: test test-fast parity bench scaling golden-update submit-smoke
+.PHONY: test test-fast parity bench scaling golden-update submit-smoke netlines
 
 test:
 	python -m pytest tests/ -x -q
@@ -27,3 +27,10 @@ submit-smoke:
 	cd /tmp/submit_smoke && spark-submit --master 'local[4]' --py-files pkg.zip launch.py generate --out src --n-convs 50
 	cd /tmp/submit_smoke && spark-submit --master 'local[4]' --py-files pkg.zip launch.py export_turns --source src --sink turns --checkpoint ck
 	cd /tmp/submit_smoke && spark-submit --master 'local[4]' --py-files pkg.zip launch.py export_all --source src --sink all --checkpoint ck_all
+
+# Added, deleted and net Python lines under stellar_etl_spark/ since a ref
+# (tracked files, working tree included): make netlines BASE=<ref>
+netlines:
+	$(if $(BASE),,$(error BASE is required: make netlines BASE=<ref>))
+	@git diff --numstat $(BASE) -- 'stellar_etl_spark/*.py' | \
+		awk '{a += $$1; d += $$2} END {printf "added %d deleted %d net %+d\n", a, d, a - d}'

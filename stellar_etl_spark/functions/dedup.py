@@ -1,5 +1,10 @@
-"""Near-duplicate detection signatures for the training-data pipeline layer:
-exact hash, MinHash + LSH banding, SimHash, n-gram Jaccard.
+"""Near-duplicate detection for the training-data pipeline layer: MinHash +
+LSH banding, SimHash, n-gram Jaccard, and the cluster and decontamination
+steps after them. (Exact dedup is a group-by on ``text.normalized``; see
+``plans/registry.py:q_doc_exact_dedup``.)
+
+SimHash has one implementation, built on md5 gram hashes, so the DuckDB
+oracle recomputes its exact hamming relation.
 
 Design for 100 TB of documents:
 
@@ -16,56 +21,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
-from stellar_etl_spark.functions.text import fingerprint64, normalized, rolling_hashes
+from stellar_etl_spark.functions.text import normalized, rolling_hashes
 
 # MinHash permutation i is min(xxhash64(i, shingle_hash)) — a universal-hash
 # approximation of a random permutation. The production pipeline below is
 # fully relational (shingle rows → per-permutation mins) because array-lambda
-# higher-order functions evaluate interpreted in Spark (measured 28x slower);
-# only simhash64 keeps a single-Column convenience form.
-
-
-def simhash64(text_col: Column, k: int = 1) -> Column:
-    """64-bit SimHash of the text's k-shingle multiset.
-
-    Per-bit vote: each shingle hash contributes +1/-1 to each of 64 bit
-    positions; the sign of the summed vote sets the output bit. Implemented
-    with ``aggregate`` + ``zip_with`` over a 64-wide int array — stays in
-    codegen, no Python.
-    """
-    hashes = rolling_hashes(text_col, k)
-    zeros = F.array_repeat(F.lit(0), 64)
-    # ±1 vote per bit per shingle; bit positions are Python-literal so the
-    # shift amounts are constants (shiftrightunsigned requires int bits).
-    votes = F.aggregate(
-        hashes,
-        zeros,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(
-                        F.shiftrightunsigned(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-                    ).otherwise(F.lit(-1))
-                    for b in range(64)
-                ]
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    # bit 63 as a long literal is the sign bit — representable only negative.
-    bit_values = F.array(
-        *[F.lit(1 << b if b < 63 else -(1 << 63)).cast("long") for b in range(64)]
-    )
-    bits = F.zip_with(
-        votes, bit_values, lambda v, bv: F.when(v > 0, bv).otherwise(F.lit(0).cast("long"))
-    )
-    return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, x: acc.bitwiseOR(x))
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit signatures (bit_count of xor)."""
-    return F.bit_count(a.bitwiseXOR(b))
+# higher-order functions evaluate interpreted in Spark (measured 28x slower).
 
 
 def jaccard_ngrams(a: Column, b: Column, k: int = 3) -> Column:
@@ -74,18 +35,6 @@ def jaccard_ngrams(a: Column, b: Column, k: int = 3) -> Column:
     inter = F.size(F.array_intersect(ha, hb))
     union = F.size(ha) + F.size(hb) - inter
     return F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(1.0))
-
-
-def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup groups via the normalized-content fingerprint: one row per
-    duplicated fingerprint with the canonical (min) id and the group size.
-    Shuffle carries (fingerprint, id) only — text never moves."""
-    return (
-        df.select(F.col(id_col), fingerprint64(F.col(text_col)).alias("fp"))
-        .groupBy("fp")
-        .agg(F.min(id_col).alias("canonical_id"), F.count(F.lit(1)).alias("n_docs"))
-        .where(F.col("n_docs") > 1)
-    )
 
 
 def shingle_hash_rows(
@@ -185,39 +134,11 @@ def minhash_candidate_pairs(
     return verified.where(F.col("jaccard") >= min_jaccard)
 
 
-def simhash_rows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 1
-) -> DataFrame:
-    """(id, sh): 64-bit SimHash per doc, relational form — shingle rows →
-    64 partial-aggregated ±1 vote sums (one groupBy, map-side combine) →
-    bit pack. Fully codegen; the array/lambda form (:func:`simhash64`) is the
-    single-column convenience API."""
-    sh = shingle_hash_rows(df, text_col, id_col, k)
-    votes = sh.groupBy("id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftrightunsigned(F.col("sh"), b).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-                ).otherwise(F.lit(-1))
-            ).alias(f"v{b}")
-            for b in range(64)
-        ]
-    )
-    packed = None
-    for b in range(64):
-        bit = F.when(
-            F.col(f"v{b}") > 0, F.lit(1 << b if b < 63 else -(1 << 63)).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        packed = bit if packed is None else packed.bitwiseOR(bit)
-    return votes.select("id", packed.alias("sh"))
-
-
 # --------------------------------------------------------------------------
-# Portable SimHash: gram hashes from md5 hex halves (32+32 bits) instead of
-# xxhash64, signature kept as two 32-bit halves — every step is reproducible
-# in any engine with md5 + bit ops, so a DuckDB oracle can recompute the
-# exact hamming<=h relation (plans/registry.py builds the mirroring SQL).
-# Same plan shape as the xxhash64 path; use that one at scale.
+# SimHash: gram hashes from md5 hex halves (32+32 bits), signature kept as
+# two 32-bit halves — every step is reproducible in any engine with md5 +
+# bit ops, so the DuckDB oracle recomputes the exact hamming<=h relation
+# (plans/registry.py builds the mirroring SQL).
 # --------------------------------------------------------------------------
 def shingle_text_rows(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
@@ -248,7 +169,7 @@ def _md5_half(col: Column, start: int) -> Column:
     return F.conv(F.substring(F.md5(col), start, 8), 16, 10).cast("long")
 
 
-def simhash_rows_portable(
+def simhash_rows(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
 ) -> DataFrame:
     """(id, sig_hi, sig_lo): 64-bit SimHash as two 32-bit halves, gram hashes
@@ -294,20 +215,20 @@ def _check_block_recall(max_hamming: int) -> None:
         )
 
 
-def simhash_near_dups_portable(
+def simhash_near_dups(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
     k: int = 3,
 ) -> DataFrame:
-    """(id_a, id_b, hamming) for portable-SimHash hamming <= max_hamming.
+    """(id_a, id_b, hamming) for SimHash hamming <= max_hamming.
 
     Candidates via 4x16-bit block banding (pigeonhole: hamming <= 3 implies
     at least one equal block — recall exactly 1), verified with bit_count on
     the halves. Shuffle carries (block, id, sig) only."""
     _check_block_recall(max_hamming)
-    sigs = simhash_rows_portable(df, text_col, id_col, k)
+    sigs = simhash_rows(df, text_col, id_col, k)
     blocks = sigs.select(
         "id",
         "sig_hi",
@@ -342,58 +263,6 @@ def simhash_near_dups_portable(
     return cands.where(F.col("hamming") <= max_hamming).select(
         "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
     )
-
-
-def simhash_near_dups(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    k: int = 1,
-    strict_recall: bool = True,
-) -> DataFrame:
-    """SimHash near-dup candidates: 4-block banding (two blocks must match for
-    hamming<=3 by pigeonhole over 4 blocks... conservatively we join on any
-    single matching 16-bit block, then verify hamming <= max_hamming).
-
-    ``strict_recall=False`` acknowledges the banding guarantee stops at
-    hamming 3 and runs larger radii as a best-effort candidate HEURISTIC
-    (pairs differing in every block are missed); the default raises instead
-    of silently under-reporting."""
-    if strict_recall:
-        _check_block_recall(max_hamming)
-    sigs = simhash_rows(df, text_col, id_col, k)
-    blocks = sigs.select(
-        "id",
-        "sh",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("sh"), b * 16).bitwiseAND(F.lit(0xFFFF))
-                    for b in range(4)
-                ]
-            )
-        ).alias("block_idx", "block_val"),
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.block_idx") == F.col("b.block_idx"))
-            & (F.col("a.block_val") == F.col("b.block_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sh").alias("sh_a"),
-            F.col("b.sh").alias("sh_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return cands.select(
-        "id_a", "id_b", hamming64(F.col("sh_a"), F.col("sh_b")).alias("hamming")
-    ).where(F.col("hamming") <= max_hamming)
 
 
 # --------------------------------------------------------------------------

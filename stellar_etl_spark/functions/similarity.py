@@ -5,7 +5,8 @@
   (JVM-side, no Python). The corpus is scanned once; per-row work is O(d).
 - :func:`lsh_topk` — the scale path: random-hyperplane signatures bucket the
   corpus so each query probes only its bucket (plus multi-probe neighbors).
-  Hyperplanes are deterministic (seeded hash), so results are replayable.
+  Hyperplanes are a ±1 matrix derived from md5 (:func:`portable_planes`), so
+  results are replayable and the DuckDB oracle recomputes the same buckets.
 
 At 100 TB the brute-force variant is the *verification* tool (exact answers on
 a sample); LSH is the production path — the bucket join shuffles only
@@ -179,24 +180,30 @@ def embedding_near_dups(
     return tasks.groupBy("bi", "bj").applyInPandas(fn, "id_a long, id_b long, sim double")
 
 
-def hyperplane_signature(vec: Column, dim: int, bits: int = 16, seed: int = 42) -> Column:
-    """Random-hyperplane LSH signature: bit b = sign(<v, h_b>) where h_b is a
-    deterministic pseudo-random ±1 hyperplane derived from (seed, b, i).
-    Pure column ops; the 'planes' never materialize. The per-plane fold is
-    deliberately the HOF form — see :func:`_dot` for the measured negative
-    result on unrolling it."""
-    def signs(b: int):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda i: F.when(
-                F.pmod(F.xxhash64(F.lit(seed), F.lit(b), i), F.lit(2)) == 0, F.lit(1.0)
-            ).otherwise(F.lit(-1.0)),
-        )
+def portable_planes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
+    """Deterministic ±1 hyperplanes from md5(seed:b:i) — computable by any
+    engine with md5, so the DuckDB oracle rebuilds the same matrix and
+    recomputes the exact buckets."""
+    import hashlib
 
+    return [
+        [
+            1.0 if hashlib.md5(f"{seed}:{b}:{i}".encode()).digest()[0] & 1 == 0 else -1.0
+            for i in range(dim)
+        ]
+        for b in range(bits)
+    ]
+
+
+def planes_signature(vec: Column, planes: list[list[float]]) -> Column:
+    """LSH signature against literal hyperplanes: bit b = sign(<v, planes[b]>).
+    The per-plane fold is deliberately the HOF form — see :func:`_dot` for
+    the measured negative result on unrolling it."""
     out = F.lit(0).cast("long")
-    for b in range(bits):
+    for b, plane in enumerate(planes):
+        arr = F.array(*[F.lit(x) for x in plane])
         out = out.bitwiseOR(
-            F.when(_dot(vec, signs(b)) > 0, F.lit(1 << b).cast("long")).otherwise(
+            F.when(_dot(vec, arr) > 0, F.lit(1 << b).cast("long")).otherwise(
                 F.lit(0).cast("long")
             )
         )
@@ -256,9 +263,17 @@ def lsh_topk(
     here; callers joining a corpus-sized query set MUST pass ``False``
     (pinned in tests/test_plans.py::test_lsh_topk_join_variants).
 
+    Table ``t`` hashes against ``portable_planes(dim, bits, seed + t)``, so
+    table 0 is the bucketing the DuckDB oracle of ``ann_lsh_topk`` rebuilds.
+    The planes are literals: the plan carries ``dim * bits * tables``
+    constants. No caller goes beyond dim 64; a much wider embedding means
+    a much larger plan.
+
     Recall is a function of true similarity: high-sim neighbors collide
     almost surely, near-orthogonal ones almost never — measured numbers in
     BENCH/BASELINE.md."""
+    planes = [portable_planes(dim, bits, seed + t) for t in range(tables)]
+
     def sigs(df: DataFrame, idc: str, vc: str) -> DataFrame:
         # signatures are computed scan-side from the vector, then the vector
         # is DROPPED before the explode: only (id, tbl, bkt) enters the
@@ -270,7 +285,7 @@ def lsh_topk(
                     *[
                         F.struct(
                             F.lit(t).alias("tbl"),
-                            hyperplane_signature(F.col(vc), dim, bits, seed + t).alias("bkt"),
+                            planes_signature(F.col(vc), planes[t]).alias("bkt"),
                         )
                         for t in range(tables)
                     ]
@@ -331,39 +346,6 @@ def lsh_topk(
         .where(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", "sim")
     )
-
-
-# --------------------------------------------------------------------------
-# Portable (cross-engine reproducible) LSH: the hyperplanes are a fixed ±1
-# matrix derived from md5, materialized as literals on BOTH engines, so a SQL
-# oracle can recompute the exact same buckets. Functionally identical to the
-# xxhash64 path above — use that one at scale (planes never materialize).
-# --------------------------------------------------------------------------
-def portable_planes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic ±1 hyperplanes from md5(seed:b:i) — computable by any
-    engine with md5, and small enough (bits x dim) to inline as literals."""
-    import hashlib
-
-    return [
-        [
-            1.0 if hashlib.md5(f"{seed}:{b}:{i}".encode()).digest()[0] & 1 == 0 else -1.0
-            for i in range(dim)
-        ]
-        for b in range(bits)
-    ]
-
-
-def planes_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """LSH signature against literal hyperplanes: bit b = sign(<v, planes[b]>)."""
-    out = F.lit(0).cast("long")
-    for b, plane in enumerate(planes):
-        arr = F.array(*[F.lit(x) for x in plane])
-        out = out.bitwiseOR(
-            F.when(_dot(vec, arr) > 0, F.lit(1 << b).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return out
 
 
 def ivf_topk(
@@ -510,59 +492,6 @@ def ivf_topk(
                 6,
             ).alias("sim"),
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "sim")
-    )
-
-
-def lsh_topk_portable(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    probe_hamming: int = 1,
-) -> DataFrame:
-    """Multi-probe LSH top-k over :func:`portable_planes` — same plan shape as
-    :func:`lsh_topk`, but the buckets are reproducible in the DuckDB oracle
-    (plans/registry.py builds the mirroring SQL from the same plane matrix)."""
-    planes = portable_planes(dim, bits, seed)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(F.col(vec_col)).alias("cvec")
-    ).withColumn("bucket", planes_signature(F.col("cvec"), planes)).withColumn(
-        "_cn", _norm(F.col("cvec"))
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(F.col(vec_col)).alias("qvec")
-    ).withColumn("bucket", planes_signature(F.col("qvec"), planes)).withColumn(
-        "_qn", _norm(F.col("qvec"))
-    )
-    masks = _probe_masks(bits, probe_hamming)
-    q = q.select(
-        "query_id",
-        "qvec",
-        "_qn",
-        F.explode(
-            F.array(*[F.col("bucket").bitwiseXOR(F.lit(m).cast("long")) for m in masks])
-        ).alias("bucket"),
-    )
-    scored = c.join(F.broadcast(q), "bucket").where(
-        F.col("neighbor_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            _dot(F.col("qvec"), F.col("cvec"))
-            / (F.col("_qn") * F.col("_cn") + F.lit(_EPS)),
-            6,
-        ).alias("sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (

@@ -29,17 +29,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col)).cast("long")
 
 
-def bpe_ish_token_count(col: Column) -> Column:
-    """BPE-flavored token estimate: split on word/number/punct boundaries like
-    a byte-pair pretokenizer would (GPT-2-style pretoken regex, simplified to
-    Java regex): runs of letters, runs of digits, single punctuation."""
-    trimmed = F.trim(F.coalesce(col, F.lit("")))
-    arr = F.split(trimmed, r"(?<=\p{L})(?=[^\p{L}])|(?<=[^\p{L}\s])(?=\p{L})|\s+|(?<=\p{Punct})(?=\p{Punct})")
-    return F.when(trimmed == "", F.lit(0)).otherwise(
-        F.size(F.filter(arr, lambda x: x != ""))
-    ).cast("long")
-
-
 # --- language id -----------------------------------------------------------
 # Tiny deterministic stopword profiles. Real deployments swap in fastText via
 # a pandas UDF; the engine-side contract (score per language, argmax, 'und'

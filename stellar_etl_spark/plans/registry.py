@@ -39,7 +39,11 @@ from stellar_etl_spark.operators import (
 )
 from stellar_etl_spark.operators.conversations import extract_conversations_windowed
 from stellar_etl_spark.operators.dims import denormalize
-from stellar_etl_spark.plans.transcript_view import TRANSCRIPTS_CTE, transcripts_from_events
+from stellar_etl_spark.plans.transcript_view import (
+    TRANSCRIPTS_CTE,
+    spread_scan,
+    transcripts_from_events,
+)
 from stellar_etl_spark.sources.batches import with_batch_bounds
 from stellar_etl_spark.session import scoped_conf
 
@@ -51,23 +55,10 @@ def _seq():
 
 
 def _scaled_read(spark: SparkSession, path: str, key: str) -> DataFrame:
-    """Parquet read that spreads UNSPLITTABLE inputs across the machine.
+    """Parquet read spread across the cores when it scans as too few tasks
+    (see :func:`transcript_view.spread_scan`)."""
+    return spread_scan(spark.read.parquet(path), key, spark.sparkContext.defaultParallelism)
 
-    A single-row-group parquet file scans as ONE task no matter what
-    ``maxPartitionBytes`` says (splits map to row groups), so every heavy
-    narrow projection stacked on it — regex quality features, shingling,
-    O(dim) vector folds, mapInPandas decoders — runs serially while the
-    other 31 cores idle (guide §2.5 "input skew ... one huge unsplittable
-    file: repartition immediately after the read"). When the scan has fewer
-    partitions than half the cores, add ONE deterministic hash exchange on
-    the table key (a few MB of raw rows — measured 10.4 -> 2.5 s on
-    doc_quality at sf1.0). At real scale inputs arrive as many
-    files/row-groups, the gate never fires, and the plan is unchanged."""
-    df = spark.read.parquet(path)
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(par // 2, 2):
-        df = df.repartition(par, F.col(key))
-    return df
 
 # Reusable DuckDB fragments mirroring the engine's column functions.
 _SQL_NTOK = (
@@ -1850,19 +1841,18 @@ WHERE CAST(i AS DOUBLE)/CAST(u AS DOUBLE) >= 0.4
 
 
 def q_doc_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable SimHash near-dups: md5-derived gram hashes and 2x32-bit
-    signature halves are recomputable in DuckDB, so the full hamming<=3
-    relation (candidates via 4x16-bit block pigeonhole, recall exactly 1)
-    is oracle-checked end-to-end. The xxhash64 variant
-    (functions/dedup.py:simhash_near_dups) is the scale-default."""
-    from stellar_etl_spark.functions.dedup import simhash_near_dups_portable
+    """SimHash near-dups: md5-derived gram hashes and 2x32-bit signature
+    halves are recomputable in DuckDB, so the full hamming<=3 relation
+    (candidates via 4x16-bit block pigeonhole, recall exactly 1) is
+    oracle-checked end-to-end."""
+    from stellar_etl_spark.functions.dedup import simhash_near_dups
 
     d = _scaled_read(spark, f"{sf_dir}/documents.parquet", "doc_id")
-    return simhash_near_dups_portable(d, max_hamming=3, k=3)
+    return simhash_near_dups(d, max_hamming=3, k=3)
 
 
-def _sql_simhash_portable(max_hamming: int = 3) -> str:
-    """DuckDB mirror of simhash_rows_portable + all-pairs hamming: same md5
+def _sql_simhash(max_hamming: int = 3) -> str:
+    """DuckDB mirror of simhash_rows + all-pairs hamming: same md5
     hex-half gram hashes, same 64 vote sums, same bit pack."""
     vh = ",\n    ".join(
         f"sum(CASE WHEN (h_hi >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS vh{b}" for b in range(32)
@@ -1904,7 +1894,7 @@ WHERE hamming <= {max_hamming}
 """
 
 
-SQL_DOC_SIMHASH_PAIRS = _sql_simhash_portable(3)
+SQL_DOC_SIMHASH_PAIRS = _sql_simhash(3)
 
 
 def q_strkey_handles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1966,15 +1956,13 @@ LEFT JOIN expected e ON t.conv_id = e.e_conv_id
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe LSH top-k over portable (md5-literal) hyperplanes — the
+    """Multi-probe LSH top-k over md5-literal hyperplanes (one table) — the
     oracle rebuilds the same buckets and probe set in SQL, so bucketing,
     probing, and ranking are all hash-checked (not just recall-sampled)."""
-    from stellar_etl_spark.functions.similarity import lsh_topk_portable
+    from stellar_etl_spark.functions.similarity import lsh_topk
 
     emb = _scaled_read(spark, f"{sf_dir}/embeddings.parquet", "vec_id")
-    out = lsh_topk_portable(
-        emb, emb.where(F.col("vec_id") < 5), dim=64, k=10, bits=8, probe_hamming=1
-    )
+    out = lsh_topk(emb, emb.where(F.col("vec_id") < 5), dim=64, k=10, bits=8, probe_hamming=1)
     return out.select("query_id", "rank", "neighbor_id")
 
 
@@ -2036,7 +2024,7 @@ WHERE rank <= 10
 """
 
 
-def _sql_lsh_topk_portable(
+def _sql_lsh_topk(
     dim: int = 64, bits: int = 8, seed: int = 42, k: int = 10, probe_hamming: int = 1
 ) -> str:
     from stellar_etl_spark.functions.similarity import _probe_masks, portable_planes
@@ -2076,7 +2064,7 @@ WHERE rank <= {k}
 """
 
 
-SQL_ANN_LSH_TOPK = _sql_lsh_topk_portable()
+SQL_ANN_LSH_TOPK = _sql_lsh_topk()
 
 
 # --- T10 trustline analog (transform/trustline.go: account<->asset
@@ -2313,7 +2301,7 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "conv_token_kmv": (q_conv_token_kmv, SQL_CONV_TOKEN_KMV),
     # exact interpolated percentiles — bit-identical across engines
     "latency_quantiles": (q_latency_quantiles, SQL_LATENCY_QUANTILES),
-    # near-dup / approx ops: verified outputs (or portable-hash variants) are
+    # near-dup / approx ops: verified outputs (or md5-derived hashes) are
     # engine-independent, so these carry full oracles too
     "doc_minhash_pairs": (q_doc_minhash_pairs, SQL_DOC_MINHASH_PAIRS),
     "strkey_handles": (q_strkey_handles, SQL_STRKEY_HANDLES),

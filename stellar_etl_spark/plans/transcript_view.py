@@ -31,20 +31,38 @@ def ensure_utc(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def spread_scan(df: DataFrame, key: str, partitions: int) -> DataFrame:
+    """Spread an UNSPLITTABLE input across the machine: when the scan has
+    fewer than ``max(cores // 2, 2)`` partitions, add ONE hash exchange on
+    ``key`` into ``partitions`` partitions; otherwise return ``df`` as is.
+
+    A single-row-group parquet file scans as ONE task no matter what
+    ``maxPartitionBytes`` says (splits map to row groups), so every heavy
+    narrow projection stacked on it — regex quality features, shingling,
+    O(dim) vector folds, the turn projection — runs serially while the other
+    cores idle (guide §2.5 "input skew ... one huge unsplittable file:
+    repartition immediately after the read"; measured 10.4 -> 2.5 s on
+    doc_quality at sf1.0). At real scale inputs arrive as many
+    files/row-groups, the gate never fires, and the plan is unchanged (both
+    cases pinned in tests/test_plans.py)."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < max(cores // 2, 2):
+        df = df.repartition(partitions, F.col(key))
+    return df
+
+
 def transcripts_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # Spread unsplittable inputs (guide §2.5): a single-row-group events file
-    # scans as ONE task, so everything narrow above it — the turn projection,
-    # token explodes in window-pruning queries like conv_token_kmv, partial
-    # aggregations — ran serially. Hash(user_id) at the session's shuffle
-    # partitioning means the turn_idx window below REUSES this exchange
-    # (same key, same count: zero extra shuffles for window consumers),
-    # while consumers that prune the window get parallel rows. At real
-    # scale the scan has many splits and the gate never fires.
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if ev.rdd.getNumPartitions() < max(par // 2, 2):
-        ev = ev.repartition(par, F.col("user_id"))
+    # Hash(user_id) at the session's shuffle partitioning means the turn_idx
+    # window below REUSES the spread's exchange (same key, same count: zero
+    # extra shuffles for window consumers), while consumers that prune the
+    # window — token explodes like conv_token_kmv, partial aggregations —
+    # get parallel rows.
+    ev = spread_scan(
+        spark.read.parquet(f"{sf_dir}/events.parquet"),
+        "user_id",
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     role = (
         F.when(F.col("event_type") == "click", F.lit("user"))

@@ -192,6 +192,14 @@ def get_spark(
         global _nio_gateway
         _nio_gateway = SparkContext._gateway
     spark.sparkContext.setLogLevel("WARN")
+    # Every streaming query start warns that AQE is not supported in
+    # streaming plans. Expected: AQE stays on for the FanoutSink extractors'
+    # batch plans, so silence that one logger by name.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark
 
 

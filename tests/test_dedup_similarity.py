@@ -1,12 +1,10 @@
 import pyspark.sql.functions as F
 
 from stellar_etl_spark.functions.dedup import (
-    exact_duplicates,
-    hamming64,
     jaccard_ngrams,
     minhash_candidate_pairs,
-    simhash64,
     simhash_near_dups,
+    simhash_rows,
 )
 from stellar_etl_spark.functions.similarity import cosine_topk, lsh_topk
 
@@ -23,12 +21,6 @@ def _docs(spark):
         (5, "tiny"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_duplicates(spark):
-    d = exact_duplicates(_docs(spark)).collect()
-    assert len(d) == 1
-    assert d[0]["canonical_id"] == 1 and d[0]["n_docs"] == 2
 
 
 def test_jaccard(spark):
@@ -49,18 +41,22 @@ def test_minhash_finds_near_dup(spark):
 
 def test_simhash_hamming(spark):
     df = _docs(spark)
-    sigs = {r["doc_id"]: r["sh"] for r in df.select("doc_id", simhash64(F.col("text")).alias("sh")).collect()}
-    two = spark.createDataFrame([(sigs[1], sigs[2]), (sigs[1], sigs[4])], "a long, b long")
-    d12, d14 = [r["d"] for r in two.select(hamming64(F.col("a"), F.col("b")).alias("d")).collect()]
-    assert d12 < d14  # near-dup closer than unrelated
-    # radius 16 > the 4-block recall guarantee: explicitly opt into the
-    # best-effort heuristic mode (default raises — pinned below)
-    near = simhash_near_dups(df, max_hamming=16, strict_recall=False).collect()
+    sigs = {
+        r["id"]: (r["sig_hi"] << 32) | r["sig_lo"] for r in simhash_rows(df).collect()
+    }
+
+    def d(a, b):
+        return bin(sigs[a] ^ sigs[b]).count("1")
+
+    assert d(1, 2) < d(1, 4)  # near-dup closer than unrelated
+    # the near-dup pair is found at the default radius (3)
+    assert (1, 2) in {(r["id_a"], r["id_b"]) for r in simhash_near_dups(df).collect()}
     import pytest
 
+    # radius 16 > the 4-block banding recall guarantee: raise, never
+    # silently under-report
     with pytest.raises(ValueError, match="recall"):
         simhash_near_dups(df, max_hamming=16)
-    assert (1, 2) in {(r["id_a"], r["id_b"]) for r in near}
 
 
 def test_cosine_topk_exact(spark):

@@ -183,6 +183,40 @@ def test_sessions_shares_partitioning(tdf):
     assert plan.count("Exchange") <= 2
 
 
+@pytest.mark.parametrize("site", ["transcripts_from_events", "_scaled_read"])
+@pytest.mark.parametrize("split", ["one_file", "many_files"])
+def test_input_spread_gate(spark, tmp_path, site, split):
+    """One input-spread gate under both call sites: a 1-file input scans as
+    one task and gets ONE hash repartition above the scan; an input written
+    as 2 x cores files already scans wide, and the gate stays off."""
+    from stellar_etl_spark.plans.registry import _scaled_read
+    from stellar_etl_spark.plans.transcript_view import transcripts_from_events
+
+    cores = spark.sparkContext.defaultParallelism
+    events = spark.range(400).selectExpr(
+        "id AS event_id",
+        "TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts",
+        "id % 25 AS user_id",
+        "'click' AS event_type",
+        "CAST(id AS STRING) AS props",
+    )
+    path = str(tmp_path / "events.parquet")
+    (events.coalesce(1) if split == "one_file" else events.repartition(2 * cores)).write.parquet(
+        path
+    )
+    n_scan = spark.read.parquet(path).rdd.getNumPartitions()
+    if split == "one_file":
+        assert n_scan == 1
+    else:
+        assert n_scan >= max(cores // 2, 2)
+    if site == "transcripts_from_events":
+        df = transcripts_from_events(spark, str(tmp_path))
+    else:
+        df = _scaled_read(spark, path, "user_id")
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("RepartitionByExpression") == (1 if split == "one_file" else 0), plan
+
+
 def test_ivf_topk_join_variants(spark):
     """IVF follows the same query-side contract as LSH: broadcast for the
     sampled-query shape, shuffle join when the caller declares queries ~

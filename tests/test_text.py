@@ -16,15 +16,6 @@ def test_token_counts(spark):
     assert all(r["n"] == r["want"] for r in got)
 
 
-def test_bpe_ish_counts_more_than_ws(spark):
-    df = _one(spark, "hello, world! x=42 foo_bar")
-    r = df.select(
-        T.token_count(F.col("text")).alias("ws"),
-        T.bpe_ish_token_count(F.col("text")).alias("bpe"),
-    ).collect()[0]
-    assert r["bpe"] > r["ws"]
-
-
 def test_language_id(spark):
     cases = [
         ("the cat and the dog sat in it for you", "en"),
