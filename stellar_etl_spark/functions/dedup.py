@@ -1,6 +1,6 @@
 """Near-duplicate detection for the training-data pipeline layer: MinHash +
-LSH banding, SimHash, n-gram Jaccard, and the cluster and decontamination
-steps after them. (Exact dedup is a group-by on ``text.normalized``; see
+LSH banding, SimHash, n-gram Jaccard, and the connected-component cluster
+step after them. (Exact dedup is a group-by on ``text.normalized``; see
 ``plans/registry.py:q_doc_exact_dedup``.)
 
 SimHash has one implementation, built on md5 gram hashes, so the DuckDB
@@ -334,42 +334,4 @@ def connected_components(
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds — "
         "component diameter exceeds the bound; raise max_iters"
-    )
-
-
-def ngram_contamination(
-    train: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    broadcast_eval: bool = True,
-) -> DataFrame:
-    """(id_col, matched_grams): training documents sharing at least one word
-    k-gram with the evaluation set — the decontamination check run before a
-    corpus ships (a train doc containing an eval k-gram leaks the benchmark).
-
-    Relational end-to-end: both sides become (id, gram-hash) rows via the
-    codegen shingle pipeline, the join is an equi-join on the 64-bit gram
-    hash, and only (hash, id) ever rides a shuffle — text stays at the scan.
-    Eval sets are tiny next to a training corpus, so the distinct eval-gram
-    side broadcasts by default (``broadcast_eval=False`` for the shuffle
-    join when it isn't). Grams of empty/whitespace-only docs are excluded —
-    an empty train doc does not "leak" an empty eval doc.
-    """
-    def gram_hashes(df: DataFrame) -> DataFrame:
-        g = shingle_text_rows(df, text_col, id_col, k)
-        return g.where(F.col("gram") != "").select(
-            "id", F.xxhash64("gram").alias("gh")
-        )
-
-    ev = gram_hashes(eval_df).select("gh").distinct()
-    if broadcast_eval:
-        ev = F.broadcast(ev)
-    return (
-        gram_hashes(train)
-        .join(ev, "gh")
-        .groupBy("id")
-        .agg(F.count_distinct("gh").alias("matched_grams"))
-        .withColumnRenamed("id", id_col)
     )

@@ -18,7 +18,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, StringType
+from pyspark.sql.types import StringType
 
 _VERSION_BYTE = 0x30  # 'G'-class handle, mirroring strkey account version
 
@@ -120,12 +120,3 @@ def strkey_decode(s: pd.Series) -> pd.Series:
     out = pd.Series([None] * len(s), index=s.index, dtype=object)
     out[mask] = [None if r is None else r.decode("utf-8", "replace") for r in raws]
     return out
-
-
-@pandas_udf(BooleanType())
-def strkey_valid(s: pd.Series) -> pd.Series:
-    mask = s.notna()
-    raws = _decode_batch([str(v) for v in s[mask]])
-    out = pd.Series([False] * len(s), index=s.index, dtype=object)
-    out[mask] = [r is not None for r in raws]
-    return out.astype(bool)

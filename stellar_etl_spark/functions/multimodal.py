@@ -1,11 +1,11 @@
-"""Multimodal column plumbing: opaque ``binary`` payloads (image/audio/video)
-with typed metadata, processed through Arrow-batched ``mapInPandas``.
+"""Media feature extraction: opaque ``binary`` payloads (image/audio/video)
+decoded to typed metadata through Arrow-batched ``mapInPandas`` — the
+``media_features`` registry query.
 
-The Spark-side architecture is fully real — schema, partition-preserving
-iterator transform, bounded batch memory (rows stream through
-``mapInPandas`` an Arrow batch at a time; a 100 TB blob column never
-materializes per-task beyond ``spark.sql.execution.arrow.maxRecordsPerBatch``
-rows).
+The Spark side is fully real: schema, partition-preserving iterator
+transform, bounded batch memory (rows stream through ``mapInPandas`` an
+Arrow batch at a time; a 100 TB blob column never materializes per-task
+beyond ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows).
 
 Decode is REAL for image headers: :func:`parse_image_header` reads PNG IHDR
 and JPEG SOF dimensions from the magic bytes (pure python, no codec libs).
@@ -24,23 +24,12 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),      # image | audio | video
-        StructField("mime", StringType(), True),
-        StructField("payload", BinaryType(), True),    # opaque bytes
-        StructField("n_bytes", LongType(), True),
-    ]
 )
 
 FEATURES_SCHEMA = StructType(
@@ -192,151 +181,6 @@ def extract_media_features(
             yield out.reindex(columns=cols)
 
     return df.mapInPandas(run, FEATURES_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),
-        StructField("width", IntegerType(), True),   # target dims for images
-        StructField("height", IntegerType(), True),
-        StructField("payload", BinaryType(), True),
-        StructField("n_bytes", LongType(), True),
-        StructField("codec", StringType(), True),    # pil | fake | null=passthrough
-    ]
-)
-
-
-def _fake_resize(payload: bytes, w: int, h: int) -> bytes:
-    """Deterministic stand-in for pixel resampling: 64 hash bytes derived
-    from (payload, target dims). Clearly NOT an image — the injection-point
-    fake for environments without an imaging library."""
-    return hashlib.sha256(payload + f":resize:{w}x{h}".encode()).digest()[:32] * 2
-
-
-def resize_images(
-    df: DataFrame,
-    target_w: int = 224,
-    target_h: int = 224,
-    resizer: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """Resize image payloads to (target_w, target_h) via ``mapInPandas``.
-
-    The Spark side is real and environment-independent: typed output schema,
-    narrow partition-preserving plan (no shuffle), Arrow-bounded batches so
-    executor memory is independent of blob size x row count. The pixel work
-    is injected: pass ``resizer=`` (e.g. a PIL-backed callable) for a real
-    resample; the default tries PIL and, absent an imaging library (this
-    sandbox), falls back to :func:`_fake_resize` with ``codec='fake'``.
-    Non-image rows pass through untouched with null dims/codec.
-    """
-    if resizer is None:
-        try:  # real path when an imaging stack exists; fake here
-            from io import BytesIO
-
-            from PIL import Image  # type: ignore[import-not-found]
-
-            def resizer(payload: bytes, w: int, h: int) -> bytes:
-                buf = BytesIO()
-                Image.open(BytesIO(payload)).resize((w, h)).save(buf, "PNG")
-                return buf.getvalue()
-
-            codec = "pil"
-        except ImportError:
-            resizer, codec = _fake_resize, "fake"
-    else:
-        codec = "custom"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            is_img = pdf["kind"] == "image"
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "kind": pdf["kind"].values,
-                    "width": pd.array(
-                        [target_w if i else None for i in is_img], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [target_h if i else None for i in is_img], dtype="Int32"
-                    ),
-                    "payload": [
-                        resizer(bytes(p), target_w, target_h)
-                        if i and p is not None
-                        else (None if p is None else bytes(p))
-                        for i, p in zip(is_img, pdf["payload"])
-                    ],
-                    "codec": [codec if i else None for i in is_img],
-                }
-            )
-            out["n_bytes"] = pd.array(
-                [None if p is None else len(p) for p in out["payload"]],
-                dtype="Int64",
-            )
-            yield out.reindex(columns=[f.name for f in RESIZED_SCHEMA.fields])
-
-    return df.mapInPandas(run, RESIZED_SCHEMA)
-
-
-FRAMES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("t_sec", DoubleType(), False),
-        StructField("frame_payload", BinaryType(), True),
-        StructField("codec", StringType(), True),
-    ]
-)
-
-
-def sample_frames(
-    df: DataFrame,
-    fps: float = 1.0,
-    max_frames: int = 32,
-    decoder: Callable[[str, bytes | None], dict] = header_decode,
-    frame_extractor: Callable[[bytes, float], bytes] | None = None,
-) -> DataFrame:
-    """Sample frames from video payloads at ``fps`` — one output row per
-    sampled frame, via ``mapInPandas`` (a narrow flat-map: output row count
-    varies per input row without any shuffle or explode).
-
-    Frame timestamps are real plumbing: ``floor(duration * fps) + 1`` frames
-    capped at ``max_frames``, at ``t = idx / fps``, duration from the same
-    injected decoder the feature extractor uses. The per-frame pixel grab is
-    the injected ``frame_extractor`` (swap in an av/ffmpeg-backed callable);
-    the default is a deterministic content-hash fake. Non-video rows emit no
-    frames."""
-    if frame_extractor is None:
-        codec = "fake"
-
-        def frame_extractor(payload: bytes, t: float) -> bytes:
-            return hashlib.sha256(payload + f":frame:{t:.3f}".encode()).digest()
-    else:
-        codec = "custom"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FRAMES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                if kind != "video" or payload is None:
-                    continue
-                dur = decoder(kind, payload).get("duration_sec")
-                if dur is None:
-                    continue
-                p = bytes(payload)
-                n = min(max_frames, int(dur * fps) + 1)
-                for idx in range(n):
-                    t = idx / fps
-                    rows.append((mid, idx, t, frame_extractor(p, t), codec))
-            out = pd.DataFrame(rows, columns=cols)
-            out["frame_idx"] = out["frame_idx"].astype("int32")
-            out["t_sec"] = out["t_sec"].astype("float64")
-            yield out
-
-    return df.mapInPandas(run, FRAMES_SCHEMA)
 
 
 def synth_media_df(spark, n: int = 100, seed: int = 42) -> DataFrame:

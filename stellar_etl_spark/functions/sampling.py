@@ -1,24 +1,19 @@
-"""Deterministic sampling and dataset splitting for the training-data
-pipeline layer: stable hash-based holdout splits and per-stratum
-exact-fraction samples.
+"""Deterministic dataset splitting for the training-data pipeline layer:
+stable hash-based holdout splits (the ``corpus_manifest`` split column).
 
-Both are pure functions of (seed, id) — re-running over a grown corpus never
-reassigns an existing row (the property that keeps eval sets honest across
-dataset versions), and every assignment is reproducible in any engine with
-md5 (the tests recompute the exact membership in DuckDB).
+The split is a pure function of (seed, id) — re-running over a grown corpus
+never reassigns an existing row (the property that keeps eval sets honest
+across dataset versions), and every assignment is reproducible in any engine
+with md5 (the tests recompute the exact membership in DuckDB).
 
-Scale shape: ``hash_split`` is a narrow projection (no shuffle at all);
-``stratified_sample`` shuffles once on the stratum key for its rank window —
-the same single-Exchange shape as any per-group top-k; ``mixture_sample``
-plans rates from one tiny collected domain aggregate, then resamples /
-epoch-replicates in a zero-Exchange scan->filter->generate pass. The md5
-hash decorrelates every decision from ingest order, id ranges, and any
+Scale shape: ``hash_split`` is a narrow projection (no shuffle at all). The
+md5 hash decorrelates every decision from ingest order, id ranges, and any
 data column.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
 from stellar_etl_spark.functions.dedup import _md5_half
@@ -65,167 +60,3 @@ def hash_split(
         F.raise_error(F.lit(f"hash_split: null {id_col} has no stable split")),
     ).otherwise(expr)
     return df.withColumn("split", expr)
-
-
-def stratified_sample(
-    df: DataFrame,
-    stratum_col: str,
-    id_col: str = "doc_id",
-    fraction: float = 0.1,
-    seed: str = "sample-v1",
-) -> DataFrame:
-    """EXACT per-stratum fraction: keep the ceil(fraction * n) rows with the
-    smallest deterministic unit hash inside each stratum.
-
-    Unlike Bernoulli sampling (``df.sample``), the per-stratum count is
-    exact, the chosen set is a stable function of (seed, ids present), and
-    any engine can recompute it. One shuffle (rank window on the stratum
-    key) — the id/hash ride it, payload columns follow the final semi-join
-    only for the sampled rows.
-
-    The count is computed in INTEGER arithmetic (fraction as a rational):
-    ``ceil(n * fraction)`` in doubles turns 100 * 0.07 into
-    7.000000000000001 and over-keeps a row."""
-    from fractions import Fraction
-
-    if not 0.0 < fraction <= 1.0:
-        raise ValueError(f"fraction must be in (0, 1], got {fraction}")
-    # Human fractions (0.07) become their intended rational (7/100); tiny
-    # rates fall through to a wider denominator instead of collapsing to 0
-    # (Fraction(4e-7).limit_denominator(10**6) == 0 would silently keep
-    # NOTHING). den <= 1e6 keeps n * num inside int64 up to n ~ 9e12 rows
-    # per stratum; the 1e12 fallback covers 1-in-millions rates on small
-    # numerators (num = round(fraction * den) stays tiny there).
-    frac = Fraction(fraction).limit_denominator(10**6)
-    if frac == 0:
-        frac = Fraction(fraction).limit_denominator(10**12)
-    if frac == 0:
-        raise ValueError(f"fraction {fraction} below 1e-12 is not supported")
-    u = _unit_hash(F.col(id_col), seed)
-    ranked = df.select(
-        F.col(stratum_col).alias("_stratum"), F.col(id_col), u.alias("_u")
-    ).withColumn(
-        "_rnk",
-        F.row_number().over(
-            Window.partitionBy("_stratum").orderBy("_u", id_col)
-        ),
-    )
-    n = Window.partitionBy("_stratum")
-    # exact ceil(n * num / den) via int64 ceiling division — DIV, not the
-    # Column `/` operator, which is a double Divide and re-introduces the
-    # very rounding this rational form exists to avoid once n * num > 2^53
-    keep_n = F.expr(
-        f"(_n * {frac.numerator}L + {frac.denominator - 1}L)"
-        f" DIV {frac.denominator}L"
-    )
-    keep = ranked.withColumn("_n", F.count(F.lit(1)).over(n)).where(
-        F.col("_rnk") <= keep_n
-    )
-    return df.join(keep.select(id_col), id_col, "left_semi")
-
-
-def mixture_rates(
-    df: DataFrame,
-    domain_col: str,
-    weights: dict[str, float],
-    token_col: str = "n_tokens",
-    total_tokens: int | None = None,
-    max_repeat: float = 16.0,
-    clamp: bool = False,
-) -> dict[str, float]:
-    """Per-domain sampling/replication rates that rebalance the corpus's
-    token mass to the target mixture ``weights`` (domain -> share of output
-    tokens, renormalized over the domains actually present).
-
-    rate_d = (w_d / sum_present(w)) * T_out / T_d where T_d is the domain's
-    current token mass and T_out the output token budget (default: preserve
-    the input total). rate <= 1 means downsample, rate > 1 means repeat the
-    domain ~rate times (epochs). One tiny groupBy(domain) aggregation is
-    collected — domains number in the dozens, never in the rows; this is
-    mixture PLANNING, the per-row work stays in `mixture_sample`.
-
-    A domain present in the data but absent from ``weights`` raises (silent
-    drops corrupt mixtures); a rate above ``max_repeat`` raises unless
-    ``clamp=True`` (repeating a tiny domain 100x is almost always a weight
-    typo, and clamping silently changes the achieved mixture)."""
-    bad = {d: w for d, w in weights.items() if w < 0}
-    if bad:
-        raise ValueError(f"mixture_rates: negative weights {bad}")
-    totals = {
-        r["_d"]: r["_t"]
-        for r in df.groupBy(F.col(domain_col).alias("_d"))
-        .agg(F.sum(F.col(token_col)).alias("_t"))
-        .collect()
-    }
-    missing = sorted(d for d in totals if d not in weights)
-    if missing:
-        raise ValueError(
-            f"mixture_rates: domains {missing} present in data but not in"
-            " weights — assign them a share (0.0 drops them explicitly)"
-        )
-    empty = sorted(d for d, t in totals.items() if not t)
-    if empty:
-        raise ValueError(
-            f"mixture_rates: domains {empty} have zero {token_col} mass"
-        )
-    wsum = sum(weights[d] for d in totals)
-    if wsum <= 0:
-        raise ValueError("mixture_rates: weights over present domains sum to 0")
-    t_in = sum(totals.values())
-    t_out = t_in if total_tokens is None else total_tokens
-    rates = {d: (weights[d] / wsum) * t_out / totals[d] for d in totals}
-    over = {d: r for d, r in rates.items() if r > max_repeat}
-    if over and not clamp:
-        raise ValueError(
-            f"mixture_rates: rates {over} exceed max_repeat={max_repeat};"
-            " pass clamp=True to cap them (changes the achieved mixture)"
-        )
-    return {d: min(r, max_repeat) for d, r in rates.items()}
-
-
-def mixture_sample(
-    df: DataFrame,
-    domain_col: str,
-    weights: dict[str, float],
-    id_col: str = "doc_id",
-    token_col: str = "n_tokens",
-    total_tokens: int | None = None,
-    seed: str = "mix-v1",
-    max_repeat: float = 16.0,
-    clamp: bool = False,
-) -> DataFrame:
-    """Resample the corpus to a target domain token mixture, deterministically.
-
-    Every row is emitted ``floor(rate_d)`` times plus once more when its
-    unit hash falls under the fractional part — so rate 0.3 keeps ~30% of a
-    domain, rate 2.4 emits 2 copies of every row and a 3rd for ~40% of them.
-    An ``epoch`` column (0-based) distinguishes repeats; expected output
-    token mass per domain = target share exactly (selection is by row hash,
-    independent of the token counts the shares weigh).
-
-    Scale shape: rates come from `mixture_rates`'s tiny collected agg; the
-    data path is a narrow scan -> filter -> generate (literal rate CASE,
-    md5 unit hash, sequence explode) with ZERO Exchange — replication
-    happens where the row already lives. Membership and copy count are pure
-    functions of (seed, id, rate table), reproducible in any engine with
-    md5 (the tests recompute them in DuckDB)."""
-    rates = mixture_rates(
-        df, domain_col, weights, token_col, total_tokens, max_repeat, clamp
-    )
-    if not rates:
-        return df.withColumn("epoch", F.lit(0)).limit(0)
-    rate: Column = F.lit(None).cast("double")
-    for d, r in rates.items():
-        rate = F.when(F.col(domain_col) == d, F.lit(r)).otherwise(rate)
-    u = _unit_hash(F.col(id_col), seed)
-    copies = F.floor(rate).cast("long") + F.when(
-        u < rate - F.floor(rate), F.lit(1)
-    ).otherwise(F.lit(0)).cast("long")
-    return (
-        df.withColumn("_copies", copies)
-        .where(F.col("_copies") > 0)
-        .withColumn(
-            "epoch", F.explode(F.sequence(F.lit(0), (F.col("_copies") - 1).cast("int")))
-        )
-        .drop("_copies")
-    )

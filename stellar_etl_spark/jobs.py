@@ -29,8 +29,20 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from collections.abc import Callable
+from typing import NamedTuple
 
 from stellar_etl_spark.session import get_spark
+
+
+class Command(NamedTuple):
+    """One export command: its extractor, the sink's merge keys and
+    precedence columns, and the plan its extractor needs (see ``main``)."""
+
+    extractor: Callable
+    keys: tuple[str, ...]
+    order_cols: tuple[str, ...] = ()
+    plan: str = "any"
 
 
 def _common(p: argparse.ArgumentParser) -> None:
@@ -248,39 +260,45 @@ def main(argv: list[str] | None = None) -> int:
         # sink resume fail loudly on the order_cols meta mismatch instead.
         return out.withColumn("first_seen_neg_us", -F.unix_micros(F.col("ts")))
 
-    raw_extractors = {
-        "export_turns": turns_ex,
-        "export_raw": raw_ex,
-        "export_units": extract_units,
-        "export_effects": extract_effects,
-        "export_timeline": extract_timeline,
-        "export_changes": lambda df: df,
-    }
-
-    extractors = {
-        "export_turns": (wrap(turns_ex), ("conv_id", "turn_idx")),
-        "export_raw": (wrap(raw_ex), ("conv_id", "turn_idx")),
-        "export_dedup": (wrap(dedup_ex), ("conv_id",)),
+    # one entry per export command. plan: "stream" extractors hold state
+    # or windows and run on the streaming plan only; "batch" extractors
+    # need a batch plan (a window function) and run on each micro-batch
+    # inside foreachBatch; "any" (stateless) run either way — on the
+    # streaming plan when strict, on each micro-batch when --lenient.
+    commands = {
+        "export_turns": Command(turns_ex, ("conv_id", "turn_idx")),
+        "export_raw": Command(raw_ex, ("conv_id", "turn_idx")),
+        # first-seen semantics: the EARLIEST row per conversation must win
+        # the merge even when watermark eviction re-emits the key later
+        "export_dedup": Command(dedup_ex, ("conv_id",), ("first_seen_neg_us",), "stream"),
         # streaming conversation summaries must be windowed (a global
         # non-windowed agg cannot emit in append mode)
-        "export_conversations": (
-            wrap(lambda df: extract_conversations_windowed(df, "5 minutes", args.watermark)),
+        "export_conversations": Command(
+            lambda df: extract_conversations_windowed(df, "5 minutes", args.watermark),
             ("conv_id", "window_start"),
+            plan="stream",
         ),
-        "export_units": (wrap(extract_units), ("conv_id", "turn_idx", "unit_idx")),
-        "export_effects": (wrap(extract_effects), ("conv_id", "turn_idx", "effect_index")),
-        "export_pairs": (
-            wrap(lambda df: streaming_pairs(df, args.watermark, 300)),
+        "export_units": Command(extract_units, ("conv_id", "turn_idx", "unit_idx")),
+        "export_effects": Command(extract_effects, ("conv_id", "turn_idx", "effect_index")),
+        "export_pairs": Command(
+            lambda df: streaming_pairs(df, args.watermark, 300),
             ("conv_id", "user_turn_idx"),
+            plan="stream",
         ),
-        "export_sessions": (
-            wrap(lambda df: extract_sessions_streaming(df, "30 minutes", args.watermark)),
+        "export_sessions": Command(
+            lambda df: extract_sessions_streaming(df, "30 minutes", args.watermark),
             ("conv_id", "session_start"),
+            plan="stream",
         ),
-        "export_timeline": (wrap(extract_timeline), ("conv_id", "turn_idx", "event_kind")),
-        # A4 ChangeCompactor: compaction needs a batch plan (window function),
-        # so it runs inside foreachBatch; merge-on-read orders by event time
-        "export_changes": (wrap(lambda df: df), ("conv_id",)),
+        "export_timeline": Command(extract_timeline, ("conv_id", "turn_idx", "event_kind")),
+        # A4 ChangeCompactor: the latest turn of each conversation per
+        # micro-batch; merge-on-read orders by event time
+        "export_changes": Command(
+            lambda df: compact_last_state(df, ["conv_id"]),
+            ("conv_id",),
+            ("ts", "turn_idx"),
+            "batch",
+        ),
     }
 
     def export(ex, sink, **kw):
@@ -292,13 +310,14 @@ def main(argv: list[str] | None = None) -> int:
             **kw,
         )
 
-    def out_sink(path, keys, **kw):
-        return IdempotentSink(path, keys, output_partitions=out_parts, fmt=args.format, **kw)
+    def out_sink(path, cmd):
+        return IdempotentSink(path, cmd.keys, order_cols=cmd.order_cols,
+                              output_partitions=out_parts, fmt=args.format)
 
     if args.cmd == "export_all":
         fan = FanoutSink({
-            name: (extractors[f"export_{name}"][0],
-                   out_sink(f"{args.sink}/{name}", extractors[f"export_{name}"][1]))
+            name: (wrap(commands[f"export_{name}"].extractor),
+                   out_sink(f"{args.sink}/{name}", commands[f"export_{name}"]))
             for name in ("turns", "units", "effects")
         })
         export(None, fan)
@@ -308,19 +327,19 @@ def main(argv: list[str] | None = None) -> int:
         }))
         return 0
 
-    ex, keys = extractors[args.cmd]
+    cmd = commands[args.cmd]
+    sink = out_sink(args.sink, cmd)
     if not args.strict_export:
-        # K5 lenient: rejected rows routed to a side sink with reasons.
-        # Only stateless extractors can run inside the per-batch validation
-        # wrapper; stateful/windowed commands need pre-cleaned input.
-        if args.cmd not in raw_extractors:
+        # K5 lenient: rejected rows routed to a side sink with reasons. The
+        # validation runs on each micro-batch, so stateful/windowed
+        # extractors cannot run behind it; they need pre-cleaned input.
+        if cmd.plan == "stream":
             raise SystemExit(
                 f"--lenient is unsupported for {args.cmd} (stateful/windowed); "
                 "pre-clean the input with a lenient export_turns first"
             )
-        sink = out_sink(args.sink, keys)
         rejected = IdempotentSink(args.sink + "_rejected", ("conv_id", "turn_idx"))
-        export(None, lenient_sink(plain(raw_extractors[args.cmd]), sink, rejected))
+        export(None, lenient_sink(plain(cmd.extractor), sink, rejected))
         print(json.dumps({
             "cmd": args.cmd,
             "epochs": len(sink.lineage()),
@@ -328,20 +347,11 @@ def main(argv: list[str] | None = None) -> int:
         }))
         return 0
 
-    if args.cmd == "export_changes":
-        sink = out_sink(
-            args.sink,
-            keys,
-            batch_transform=lambda df: compact_last_state(df, ["conv_id"]),
-            order_cols=("ts", "turn_idx"),
-        )
-    elif args.cmd == "export_dedup":
-        # first-seen semantics: the EARLIEST row per conversation must win
-        # the merge even when watermark eviction re-emits the key later
-        sink = out_sink(args.sink, keys, order_cols=("first_seen_neg_us",))
+    if cmd.plan == "batch":
+        metrics = export(None, FanoutSink({args.cmd: (wrap(cmd.extractor), sink)}),
+                         with_listener=True)
     else:
-        sink = out_sink(args.sink, keys)
-    metrics = export(ex, sink, with_listener=True)
+        metrics = export(wrap(cmd.extractor), sink, with_listener=True)
     print(json.dumps({"cmd": args.cmd, "metrics": metrics, "epochs": len(sink.lineage())}))
     return 0
 

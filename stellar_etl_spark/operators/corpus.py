@@ -6,14 +6,14 @@ this package exists for —
     sequence packing
 
 One call produces a per-document manifest (keep/drop with reason, split,
-token offset, pack bin) from which a shard writer can lay out training
-sequences. Every stage is the already-tested operator: the gate and
-fingerprints are one narrow scan; exact dedup keeps the min id per
-normalized-content fingerprint (one hash shuffle of (fp, id)); near-dup
-canonicalization keeps one doc per connected component of the verified
-MinHash pair graph (functions/dedup.py); the split is a pure function of
-(seed, id); packing is the distributed two-phase prefix sum. Text never
-rides any shuffle except the candidate-verify join inside pair generation.
+token offset, pack bin): the ``corpus_manifest`` registry query. Every
+stage is the already-tested operator: the gate and fingerprints are one
+narrow scan; exact dedup keeps the min id per normalized-content
+fingerprint (one hash shuffle of (fp, id)); near-dup canonicalization
+keeps one doc per connected component of the verified MinHash pair graph
+(functions/dedup.py); the split is a pure function of (seed, id); packing
+is the distributed two-phase prefix sum. Text never rides any shuffle
+except the candidate-verify join inside pair generation.
 """
 
 from __future__ import annotations
@@ -105,44 +105,4 @@ def build_training_corpus(
     )
     return packed.select(
         id_col, "lang_pred", "n_tokens", "quality", "split", "token_offset", "pack_bin"
-    )
-
-
-def write_training_shards(
-    manifest: DataFrame,
-    documents: DataFrame,
-    out_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_partitions: int | None = None,
-) -> None:
-    """Materialize the packed corpus: text joins the manifest ONCE (the only
-    time text moves), shards land partitioned by split with rows ordered by
-    their global token offset, so a sequential reader of one split streams
-    documents in packing order (file order within a split is recoverable
-    from min(token_offset) per file).
-
-    Partitioning is ``repartitionByRange(split, token_offset)`` — the old
-    ``repartition("split")`` hash-partitioned on a 3-value column, which
-    funneled ~98% of a real corpus (the 'train' split) through ONE
-    sort-and-write task: correct at test scale, THE bottleneck and an OOM
-    at 100 TB. Range partitioning spreads each split over many tasks whose
-    rows are contiguous in token_offset; the within-task sort leads with
-    ``split`` so the writer's required child ordering on the partition
-    column is already satisfied (no stacked writer Sort) even for the rare
-    task straddling a split boundary.
-
-    ``num_partitions=None`` uses the session shuffle partitioning — set it
-    ~ (corpus bytes / target file size) on a real run. Values below 1 raise
-    ``ValueError``."""
-    if num_partitions is not None and num_partitions < 1:
-        raise ValueError(f"num_partitions must be >= 1 or None, got {num_partitions}")
-    joined = manifest.join(documents.select(id_col, text_col), id_col)
-    n = num_partitions or int(joined.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    (
-        joined.repartitionByRange(n, "split", "token_offset")
-        .sortWithinPartitions("split", "token_offset")
-        .write.mode("overwrite")
-        .partitionBy("split")
-        .parquet(out_dir)
     )

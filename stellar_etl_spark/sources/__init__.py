@@ -7,4 +7,4 @@ from stellar_etl_spark.sources.transcripts import (  # noqa: F401
     read_stream,
     read_range,
 )
-from stellar_etl_spark.sources.batches import with_batch_bounds, tumbling  # noqa: F401
+from stellar_etl_spark.sources.batches import with_batch_bounds  # noqa: F401

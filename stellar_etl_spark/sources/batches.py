@@ -1,23 +1,16 @@
-"""S4/S5: windowed batching — the StreamLedgerBatches analog
+"""S4/S5: ledger batching — the StreamLedgerBatches analog
 (``internal/input/ledger_batches.go:27-62``): the reference groups the ledger
 stream into inclusive ``[start, end]`` batches of ``batch-size`` (default 64
 ledgers ≈ 5 minutes) and emits one output file per batch with deterministic
-``{start}-{end}-{type}`` names (``cmd/command_utils.go:105-111``).
-
-Spark shape: a tumbling event-time window column. The deterministic window
-bounds are exactly the deterministic filenames — they key the idempotent sink.
+``{start}-{end}-{type}`` names (``cmd/command_utils.go:105-111``). This
+module batches on sequence position; the event-time form is the tumbling
+window of ``operators/conversations.py:extract_conversations_windowed``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
-
-
-def tumbling(df: DataFrame, window: str = "5 minutes", ts_col: str = "ts") -> DataFrame:
-    """Attach tumbling-window bounds columns (window_start, window_end)."""
-    win = F.window(ts_col, window)
-    return df.withColumn("window_start", win["start"]).withColumn("window_end", win["end"])
 
 
 def with_batch_bounds(df: DataFrame, batch_size: int = 64, seq_col: str = "turn_idx") -> DataFrame:

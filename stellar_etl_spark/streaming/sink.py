@@ -102,7 +102,6 @@ class IdempotentSink:
         self,
         path: str,
         keys: tuple[str, ...] = ("conv_id", "turn_idx"),
-        batch_transform=None,
         order_cols: tuple[str, ...] = (),
         output_partitions: int | None = None,
         fmt: str = "parquet",
@@ -124,10 +123,6 @@ class IdempotentSink:
         if output_partitions is not None and output_partitions < 1:
             raise ValueError(f"output_partitions must be >= 1, got {output_partitions}")
         self.output_partitions = output_partitions
-        # applied inside foreachBatch — the place for operators that need a
-        # *batch* plan (window functions etc.) in a streaming job, e.g. the
-        # per-micro-batch ChangeCompactor (A4)
-        self.batch_transform = batch_transform
         # merge-on-read precedence before epoch recency, e.g. ("ts",) for
         # last-state-by-event-time semantics
         self.order_cols = list(order_cols)
@@ -137,8 +132,6 @@ class IdempotentSink:
         from pyspark.sql import Observation
 
         self._write_meta()
-        if self.batch_transform is not None:
-            df = self.batch_transform(df)
         if self.output_partitions:
             df = df.coalesce(self.output_partitions)
         out_dir = os.path.join(self.path, f"epoch={epoch_id}")

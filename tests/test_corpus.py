@@ -2,14 +2,10 @@
 canonicalization -> split -> per-split packing, as one composition."""
 
 import pyspark.sql.functions as F
-import pytest
 
 from stellar_etl_spark.functions.dedup import minhash_candidate_pairs
 from stellar_etl_spark.functions.text import fingerprint64
-from stellar_etl_spark.operators.corpus import (
-    build_training_corpus,
-    write_training_shards,
-)
+from stellar_etl_spark.operators.corpus import build_training_corpus
 
 SF = "/root/testdata/sf0.001"
 
@@ -67,20 +63,6 @@ def test_corpus_deterministic_and_subset_stable(spark):
     assert all(r["split"] == split_full[r["doc_id"]] for r in common)
 
 
-def test_write_training_shards_roundtrip(spark, tmp_path):
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    m = build_training_corpus(d, min_quality=0.2)
-    out = str(tmp_path / "shards")
-    write_training_shards(m, d, out)
-    back = spark.read.parquet(out)
-    assert back.count() == m.count()
-    assert set(back.select("split").distinct().toPandas()["split"]) == set(
-        m.select("split").distinct().toPandas()["split"]
-    )
-    # every shard row carries its text and packing coordinates
-    assert {"doc_id", "text", "token_offset", "pack_bin", "split"} <= set(back.columns)
-
-
 def test_pack_bins_carry_cols(spark):
     """carry_cols pass through the packer unchanged (the corpus manifest
     relies on this instead of a self-join back to its input lineage)."""
@@ -101,58 +83,3 @@ def test_pack_bins_carry_cols(spark):
     assert (
         out.where(F.col("pack_bin") != F.expr("token_offset DIV 2048")).count() == 0
     )
-
-
-def test_write_training_shards_range_partitioned(spark, tmp_path):
-    """The shard write must NOT hash-partition on the 3-value split column
-    (one sort+write task per split = the 100 TB scale-killer): the exchange
-    feeding the writer is RANGE partitioning over (split, token_offset) with
-    more than one partition even for a single-split manifest."""
-    d = spark.range(500).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("doc "), F.col("id").cast("string")).alias("text"),
-    )
-    m = (
-        d.select(
-            "doc_id",
-            F.lit("train").alias("split"),
-            (F.col("doc_id") % 9 + 1).alias("n_tokens"),
-            (F.col("doc_id") * 5).alias("token_offset"),
-            F.lit(0).cast("long").alias("pack_bin"),
-        )
-    )
-    # capture the executed write plan via explain on the pre-write frame
-    joined = m.join(d.select("doc_id", "text"), "doc_id")
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    pre = joined.repartitionByRange(n, "split", "token_offset")
-    plan = pre._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan.lower()
-    # and the real writer path produces >1 file for the single train split
-    out = str(tmp_path / "shards_range")
-    write_training_shards(m, d, out)
-    import glob
-
-    files = glob.glob(f"{out}/split=train/part-*.parquet")
-    assert len(files) > 1, files
-    back = spark.read.parquet(out)
-    assert back.count() == 500
-
-
-def test_write_training_shards_rejects_nonpositive_partitions(spark, tmp_path):
-    """``num_partitions=0`` is an error, not a silent fall back to the
-    session default; ``None`` stays the way to ask for the default."""
-    d = spark.range(4).select(
-        F.col("id").alias("doc_id"), F.lit("doc").alias("text")
-    )
-    m = d.select(
-        "doc_id",
-        F.lit("train").alias("split"),
-        F.lit(1).alias("n_tokens"),
-        F.col("doc_id").alias("token_offset"),
-        F.lit(0).cast("long").alias("pack_bin"),
-    )
-    out = tmp_path / "shards"
-    for bad in (0, -1):
-        with pytest.raises(ValueError, match="num_partitions"):
-            write_training_shards(m, d, str(out), num_partitions=bad)
-    assert not out.exists()

@@ -230,55 +230,3 @@ def test_connected_components_raises_past_max_iters(spark):
         for r in connected_components(edges, max_iters=5).collect()
     }
     assert got == {(i, 1) for i in range(1, 7)}
-
-
-def test_ngram_contamination_oracle_and_planted_leak(spark):
-    """Decontamination: matched-gram counts against a DuckDB recomputation of
-    the full train-gram x eval-gram intersection (k=3 word shingles, same
-    <=k-word convention), plus a planted verbatim leak that must be flagged."""
-    from stellar_etl_spark.functions.dedup import ngram_contamination
-    from stellar_etl_spark.plans.registry import _SQL_NORM
-    from tests.oracle_harness import duck_connection, compare
-    import duckdb
-
-    sf = "/root/testdata/sf0.001"
-    d = spark.read.parquet(f"{sf}/documents.parquet")
-    train = d.where("doc_id % 5 != 0")
-    ev = d.where("doc_id % 5 = 0")
-    got = ngram_contamination(train, ev, k=3)
-    duck = duck_connection(sf)
-    try:
-        r = compare(
-            got,
-            duck,
-            f"""
-WITH norm AS (SELECT doc_id, regexp_split_to_array({_SQL_NORM}, ' ') AS w FROM documents),
-grams AS (
-  SELECT doc_id,
-    CASE WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-         ELSE [array_to_string(w[i+1:i+3], ' ') FOR i IN range(0, len(w)-2)] END AS gs
-  FROM norm
-),
-g AS (SELECT doc_id, unnest(list_distinct(gs)) AS gram FROM grams WHERE gs <> ['']),
-egrams AS (SELECT DISTINCT gram FROM g WHERE doc_id % 5 = 0 AND gram <> '')
-SELECT g.doc_id, CAST(count(DISTINCT g.gram) AS BIGINT) AS matched_grams
-FROM g JOIN egrams USING (gram)
-WHERE g.doc_id % 5 != 0 AND g.gram <> ''
-GROUP BY g.doc_id
-""",
-        )
-        assert r["rows_match"] and r["values_match"], r["first_diff"]
-    finally:
-        duck.close()
-
-    # planted leak: a train doc quoting an eval doc verbatim is flagged
-    leak = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        ["doc_id", "text"],
-    )
-    clean = spark.createDataFrame(
-        [(2, "totally unrelated content with no overlap whatsoever here")],
-        ["doc_id", "text"],
-    )
-    flagged = ngram_contamination(leak.union(clean), leak, k=8).collect()
-    assert [r["doc_id"] for r in flagged] == [1]

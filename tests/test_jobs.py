@@ -125,6 +125,30 @@ def test_export_changes_compacts(spark, tmp_path, capsys):
     assert changes.select("conv_id").distinct().count() == 15
 
 
+def test_lenient_export_changes_compacts_like_strict(spark, tmp_path, capsys):
+    """``export_changes --lenient`` keeps each conversation's latest turn
+    (the per-micro-batch ChangeCompactor) and writes the strict sink's merge
+    precedence, so either mode can resume the other's sink."""
+    from stellar_etl_spark.operators import compact_last_state
+    from stellar_etl_spark.sources.transcripts import read_batch
+    from stellar_etl_spark.streaming.sink import IdempotentSink
+
+    src = str(tmp_path / "src")
+    jobs.main(["generate", "--out", src, "--n-convs", "15"])
+    for mode in ("strict", "lenient"):
+        jobs.main(["export_changes", *(["--lenient"] if mode == "lenient" else []),
+                   "--source", src, "--sink", str(tmp_path / mode),
+                   "--checkpoint", str(tmp_path / f"ck_{mode}")])
+    capsys.readouterr()
+    strict, lenient = (IdempotentSink.from_meta(str(tmp_path / m)) for m in ("strict", "lenient"))
+    assert lenient.order_cols == strict.order_cols == ["ts", "turn_idx"]
+    expected = compact_last_state(read_batch(spark, src), ["conv_id"])
+    cols = ["conv_id", "turn_idx", "role", "text", "ts"]
+    got = sorted(map(tuple, lenient.read_sink(spark).select(cols).collect()))
+    assert len(got) == 15
+    assert got == sorted(map(tuple, expected.select(cols).collect()))
+
+
 def test_export_all_per_table_keys(spark, tmp_path, capsys):
     src = str(tmp_path / "src")
     jobs.main(["generate", "--out", src, "--n-convs", "10"])
